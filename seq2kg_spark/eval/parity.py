@@ -3,72 +3,12 @@
 The parity gate (BASELINE.json metric): inner join on (doc, subj, pred,
 obj), counts → P/R.  Pure Catalyst: two aggregates + one join; the golden
 side is tiny (reference eval sets), so it broadcasts.
-
-Also loads the reference's committed outputs / ground truths
-(/root/reference/sourcecode/<model>/output/<ds>.csv and
-/root/reference/datasets/<ds>/ground_truth_triples_test.csv — schema per
-reference candidate_extraction/triples_from_test_data.py:35-38) as the
-golden DataFrame (FIXTURES.md §F3).
 """
 
 from __future__ import annotations
 
-import csv
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_REF_ROOT = "/root/reference"
-_DATASETS = ("bbn", "automotiveEngineering", "cateringServices")
-_MODELS = ("candidate_extraction", "candidate_filtering",
-           "end_to_end_model", "joint_model")
-
-REFERENCE_TRIPLES_SCHEMA = T.StructType([
-    T.StructField("dataset", T.StringType()),
-    T.StructField("model", T.StringType()),
-    T.StructField("doc_idx", T.IntegerType()),
-    T.StructField("s1", T.StringType()),
-    T.StructField("r", T.StringType()),
-    T.StructField("s2", T.StringType()),
-    T.StructField("t1", T.StringType()),
-    T.StructField("t2", T.StringType()),
-])
-
-
-def load_reference_triples(spark: SparkSession) -> DataFrame:
-    """All committed reference outputs + ground truths as one DataFrame."""
-    rows: list[tuple] = []
-
-    def read_csv_rows(path: str, dataset: str, model: str) -> None:
-        if not os.path.exists(path):
-            return
-        with open(path, newline="", encoding="utf-8") as f:
-            reader = csv.reader(f)
-            header = next(reader, None)
-            if header is None:
-                return
-            for row in reader:
-                if len(row) < 4:
-                    continue
-                t1 = row[4] if len(row) > 4 else None
-                t2 = row[5] if len(row) > 5 else None
-                try:
-                    idx = int(row[0])
-                except ValueError:
-                    continue
-                rows.append((dataset, model, idx, row[1], row[2], row[3], t1, t2))
-
-    for ds in _DATASETS:
-        read_csv_rows(
-            os.path.join(_REF_ROOT, "datasets", ds,
-                         "ground_truth_triples_test.csv"), ds, "ground_truth")
-        for model in _MODELS:
-            read_csv_rows(
-                os.path.join(_REF_ROOT, "sourcecode", model, "output",
-                             f"{ds}.csv"), ds, model)
-    return spark.createDataFrame(rows, REFERENCE_TRIPLES_SCHEMA)
 
 
 def exact_pr(

@@ -31,30 +31,6 @@ def quantized(vec_col, quant: int = 1000):
     )
 
 
-def _seq_sum(terms):
-    """Left-deep (sequential-order) sum — same accumulation order as the
-    HOF aggregate fold, so float results are bit-identical to it.  The
-    left-deep tree is O(n) deep: codegen recursion overflows the JVM stack
-    near a thousand terms, so callers cap n (see FLAT_FLOAT_MAX_DIM)."""
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def _tree_sum(terms):
-    """Balanced-tree sum — O(log n) expression depth, safe for wide
-    vectors.  Only for EXACT arithmetic (int64): the addition order
-    differs from the sequential fold, which is invisible to integers and
-    NOT to floats."""
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
 # Past this width the flat forms stop paying: the expression tree itself
 # gets large (compile time, codegen size) and for floats the left-deep
 # chain would overflow the codegen recursion stack (a 768-dim left-deep
@@ -63,8 +39,17 @@ FLAT_INT_MAX_DIM = 4096
 FLAT_FLOAT_MAX_DIM = 256
 
 
+def _quote(name: str) -> str:
+    """Column name as a SQL identifier (backticked, so dots and spaces in
+    the name are part of it)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _tree_sum_sql(terms: list[str]) -> str:
-    """String twin of :func:`_tree_sum` (same pairing order)."""
+    """Balanced-tree sum — O(log n) expression depth, safe for wide
+    vectors.  Only for EXACT arithmetic (int64): the addition order
+    differs from the sequential fold, which is invisible to integers and
+    NOT to floats."""
     while len(terms) > 1:
         terms = [
             f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms)
@@ -74,81 +59,64 @@ def _tree_sum_sql(terms: list[str]) -> str:
     return terms[0]
 
 
-def _as_col(c):
-    return F.col(c) if isinstance(c, str) else c
+def _seq_sum_sql(terms: list[str]) -> str:
+    """Left-deep (sequential-order) sum — same accumulation order as the
+    ``aggregate`` fold.  The left-deep tree is O(n) deep: codegen
+    recursion overflows the JVM stack near a thousand terms, so callers
+    cap n (see FLAT_FLOAT_MAX_DIM)."""
+    out = terms[0]
+    for t in terms[1:]:
+        out = f"({out} + {t})"
+    return out
 
 
-def int_dot(a, b, dim: int | None = None):
-    """Integer dot product.  With ``dim`` given (and small enough), emits
+def _size_guarded(a: str, b: str, dim: int, flat: str, fold: str):
+    """``flat`` when both vectors have ``dim`` elements, else ``fold`` —
+    ONE parsed SQL expression: building the flat tree from Column objects
+    cost ~300 py4j round-trips of driver time per plan (~0.25s at
+    dim=64), the parse ~1."""
+    return F.expr(f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
+                  f"THEN {flat} ELSE {fold} END")
+
+
+def int_dot(a: str, b: str, dim: int | None = None):
+    """Integer dot product of the array columns named ``a`` and ``b``.
+    With ``dim`` given (up to FLAT_INT_MAX_DIM), ``dim``-element rows take
     a flat element_at-sum (whole-stage-codegen'd; higher-order-function
-    lambdas are interpreted) guarded by a size check that falls back to
-    the aggregate form — identical values either way (int64 addition is
-    associative, so the balanced tree is exact), measured ~1.5x on the
-    sf1.0 brute-force scan.
-
-    Pass ``a``/``b`` as column NAMES to get the flat form as ONE parsed
-    SQL expression: the Column-object form costs ~300 py4j round-trips of
-    driver time per plan build (~0.25s at dim=64), the parsed string ~1.
-    Column inputs keep the Column builder (tests, composed expressions).
-    """
-    ca, cb = _as_col(a), _as_col(b)
-    hof = F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    lambdas are interpreted) and other rows the ``aggregate`` fold —
+    identical values either way (int64 addition is associative, so the
+    balanced tree is exact), measured ~1.5x on the sf1.0 brute-force
+    scan."""
+    a, b = _quote(a), _quote(b)
+    fold = (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+            f"CAST(0 AS BIGINT), (acc, v) -> acc + v)")
     if dim is None or dim < 1 or dim > FLAT_INT_MAX_DIM:
-        return hof
-    if isinstance(a, str) and isinstance(b, str):
-        flat = F.expr(_tree_sum_sql(
-            [f"(element_at({a}, {i}) * element_at({b}, {i}))"
-             for i in range(1, dim + 1)]
-        ))
-    else:
-        flat = _tree_sum(
-            [F.element_at(ca, i) * F.element_at(cb, i)
-             for i in range(1, dim + 1)]
-        )
-    return F.when((F.size(ca) == dim) & (F.size(cb) == dim), flat) \
-        .otherwise(hof)
+        return F.expr(fold)
+    flat = _tree_sum_sql([f"(element_at({a}, {i}) * element_at({b}, {i}))"
+                          for i in range(1, dim + 1)])
+    return _size_guarded(a, b, dim, flat, fold)
 
 
-def float_cosine(a, b, dim: int | None = None):
-    ca, cb = _as_col(a), _as_col(b)
+def float_cosine(a: str, b: str, dim: int | None = None):
+    """Cosine of the array columns named ``a`` and ``b``; flat form for
+    ``dim``-element rows (up to FLAT_FLOAT_MAX_DIM), ``aggregate`` folds
+    otherwise.  The flat sums are LEFT-DEEP so their accumulation order
+    matches the folds'."""
+    a, b = _quote(a), _quote(b)
+
+    def norm(col: str) -> str:
+        return f"sqrt(aggregate({col}, 0D, (acc, v) -> acc + v * v))"
+
+    fold = (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, "
+            f"(acc, v) -> acc + v) / ({norm(a)} * {norm(b)})")
     if dim is None or dim < 1 or dim > FLAT_FLOAT_MAX_DIM:
-        dot = F.aggregate(F.zip_with(ca, cb, lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, v: acc + v)
-        na = F.sqrt(F.aggregate(ca, F.lit(0.0), lambda acc, v: acc + v * v))
-        nb = F.sqrt(F.aggregate(cb, F.lit(0.0), lambda acc, v: acc + v * v))
-        return dot / (na * nb)
-    # flat codegen form, LEFT-DEEP so the accumulation order (and thus
-    # every float bit) matches the aggregate fold; the caller guarantees
-    # fixed-length vectors (the aggregate form's null-padding path cannot
-    # trigger on equal dims).  String inputs build the three sums as ONE
-    # parsed SQL expression (same py4j-chatter argument as int_dot).
-    if isinstance(a, str) and isinstance(b, str):
-        def seq(terms):
-            out = terms[0]
-            for t in terms[1:]:
-                out = f"({out} + {t})"
-            return out
-
-        ea = [f"element_at({a}, {i})" for i in range(1, dim + 1)]
-        eb = [f"element_at({b}, {i})" for i in range(1, dim + 1)]
-        dot = seq([f"({x} * {y})" for x, y in zip(ea, eb)])
-        na = f"sqrt({seq([f'({x} * {x})' for x in ea])})"
-        nb = f"sqrt({seq([f'({y} * {y})' for y in eb])})"
-        flat = F.expr(f"{dot} / ({na} * {nb})")
-    else:
-        ea = [F.element_at(ca, i) for i in range(1, dim + 1)]
-        eb = [F.element_at(cb, i) for i in range(1, dim + 1)]
-        dotc = _seq_sum([x * y for x, y in zip(ea, eb)])
-        nac = F.sqrt(_seq_sum([x * x for x in ea]))
-        nbc = F.sqrt(_seq_sum([y * y for y in eb]))
-        flat = dotc / (nac * nbc)
-    return F.when((F.size(ca) == dim) & (F.size(cb) == dim), flat).otherwise(
-        float_cosine(ca, cb)
-    )
+        return F.expr(fold)
+    ea = [f"element_at({a}, {i})" for i in range(1, dim + 1)]
+    eb = [f"element_at({b}, {i})" for i in range(1, dim + 1)]
+    dot = _seq_sum_sql([f"({x} * {y})" for x, y in zip(ea, eb)])
+    na = f"sqrt({_seq_sum_sql([f'({x} * {x})' for x in ea])})"
+    nb = f"sqrt({_seq_sum_sql([f'({y} * {y})' for y in eb])})"
+    return _size_guarded(a, b, dim, f"({dot} / ({na} * {nb}))", fold)
 
 
 def _probe_dim(emb: DataFrame, vec_col: str) -> int | None:

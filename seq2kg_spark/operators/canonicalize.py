@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from seq2kg_spark.operators.dedup import band_signature
+
 
 # --------------------------------------------------------------------------
 # Cache lifetime management.
@@ -153,17 +155,18 @@ SIM_MAX_BUCKET_DEFAULT = 1_000
 # historical signature formula the DuckDB twin interpolates.
 SIM_BAND_ROWS_DEFAULT = 4
 SIM_N_BANDS_DEFAULT = 32
+# Jaccard over char 3-grams a verified same-entity pair must reach.
+SIM_THRESHOLD_DEFAULT = 0.55
 
 
 def similarity_edges(
     mentions: DataFrame,
-    threshold: float = 0.55,
+    threshold: float = SIM_THRESHOLD_DEFAULT,
     n_bands: int = SIM_N_BANDS_DEFAULT,
     k: int = 3,
     max_bucket: int = SIM_MAX_BUCKET_DEFAULT,
     hash_fn: str = "xxhash64",
     new_flag_col: str | None = None,
-    cache_registry: list | None = None,
     band_rows: int = SIM_BAND_ROWS_DEFAULT,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -175,10 +178,10 @@ def similarity_edges(
 
     The two internal ``persist()``s (norm shingle sets, banded signatures)
     back the returned plan lazily, so they cannot be unpersisted here.
-    Their release handles go into ``cache_registry`` if given (the
-    canonicalize / incremental_assign path releases them as soon as the
-    edge set is cut from this lineage), else onto the returned DataFrame's
-    ``_canon_caches`` for :func:`release_caches` after materialization.
+    Their release handles go onto the returned DataFrame's
+    ``_canon_caches`` for :func:`release_caches` after materialization
+    (canonicalize / incremental_assign release them as soon as the edge
+    set is cut from this lineage).
 
     ``band_rows`` (r): MinHash rows per band.  A (band, sig) bucket
     collides with probability jaccard^r, so r=1 degenerates on
@@ -186,9 +189,9 @@ def similarity_edges(
     somewhere (same failure the dedup module measured at 181.5 M
     candidates on 50k pages) and the hot-bucket cap then DROPS true pairs
     wholesale.  r>1 suppresses low-similarity collisions before the cap
-    ever fires; the r=1 default keeps the kg_similarity_edges oracle
-    hash-exact (tools/zipf_recall_study.py is the recall/cost evidence
-    per (cap, r) on both corpus shapes).
+    ever fires; the kg_similarity_edges oracle pins r=1 explicitly to
+    stay hash-exact (tools/zipf_recall_study.py is the recall/cost
+    evidence per (cap, r) on both corpus shapes).
 
     ``max_bucket`` is the skew guard on the LSH self-join: a (band, sig)
     bucket of n members emits n² candidate rows, so one hot signature
@@ -225,46 +228,15 @@ def similarity_edges(
         F.array_sort(_char_shingles(F.col("norm"), k)).alias("shingles"),
     ).persist()
     # Banded min-signatures without exploding shingles: per (norm, band),
-    # sig = min over the row's shingle array of hash(band, shingle) — a
+    # sig = min over the row's shingle array of hash(band, j, shingle) — a
     # narrow transform + array_min.  xxhash64 (8-byte ints, JVM-side) is
     # the scale path; md5 hex strings are cross-engine-identical for the
-    # DuckDB oracle twin — same seam as dedup.minhash_signatures (string
-    # min is lexicographic in both formulations).
+    # DuckDB oracle twin (string min is lexicographic in both engines).
     banded = norm_sets.select(
         "norm", *flag, "shingles",
         F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
     )
-    def _row_min(j):
-        # row j of the band: an independent MinHash — seed (band, j)
-        if hash_fn == "md5":
-            return F.array_min(F.transform(
-                F.col("shingles"),
-                lambda s: F.md5(F.concat_ws(
-                    ":", F.col("band").cast("string"),
-                    F.lit(str(j)), s)),
-            ))
-        return F.array_min(F.transform(
-            F.col("shingles"),
-            lambda s: F.xxhash64(F.col("band"), F.lit(j), s)))
-
-    if band_rows <= 1:
-        # r=1 keeps the historical signature formula (band, shingle) —
-        # the kg_similarity_edges DuckDB twin interpolates it
-        if hash_fn == "md5":
-            h = F.array_min(F.transform(
-                F.col("shingles"),
-                lambda s: F.md5(F.concat_ws(
-                    ":", F.col("band").cast("string"), s)),
-            ))
-        else:
-            h = F.array_min(F.transform(
-                F.col("shingles"), lambda s: F.xxhash64(F.col("band"), s)))
-    else:
-        # r-row band signature: all r row-minima must match for a bucket
-        # collision (P = jaccard^r); fold them into one join key
-        mins = [_row_min(j) for j in range(band_rows)]
-        h = (F.md5(F.concat_ws("|", *mins)) if hash_fn == "md5"
-             else F.xxhash64(*mins))
+    h = band_signature(F.col("shingles"), F.col("band"), band_rows, hash_fn)
     # keep the persisted handle (sig is reassigned below) for the release
     sig_raw = banded.select("norm", *flag, "band", h.alias("sig")).persist()
     sig = sig_raw
@@ -313,11 +285,8 @@ def similarity_edges(
         )
         .select("a", "b")
     )
-    releases = [norm_sets.unpersist, sig_raw.unpersist, *extra_releases]
-    if cache_registry is not None:
-        cache_registry.extend(releases)
-    else:
-        out._canon_caches = releases
+    out._canon_caches = [norm_sets.unpersist, sig_raw.unpersist,
+                         *extra_releases]
     return out
 
 
@@ -326,7 +295,6 @@ def connected_components(
     max_iter: int = 20,
     checkpoint_every: int = 1,
     stats: dict | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Alternating large-star / small-star connected components.
 
@@ -340,9 +308,9 @@ def connected_components(
     Cache lifetime: round k's checkpoint blocks are released as soon as
     round k+1's checkpoint has materialized (previously every round's edge
     snapshot stayed resident for the whole loop).  The FINAL round's blocks
-    back the returned mapping lazily, so their release handle goes into
-    ``cache_registry`` if given, else onto the result's ``_canon_caches``
-    (:func:`release_caches` after materialization).
+    back the returned mapping lazily, so their release handle goes onto
+    the result's ``_canon_caches`` (:func:`release_caches` after
+    materialization).
     """
     spark = edges.sparkSession
     # undirected, deduped, self-loops dropped
@@ -443,16 +411,13 @@ def connected_components(
         F.min("component").alias("component")
     )
     if final_release is not None:
-        if cache_registry is not None:
-            cache_registry.append(final_release)
-        else:
-            out._canon_caches = [final_release]
+        out._canon_caches = [final_release]
     return out
 
 
 def canonicalize(
     triples: DataFrame,
-    threshold: float = 0.55,
+    threshold: float = SIM_THRESHOLD_DEFAULT,
     n_bands: int = SIM_N_BANDS_DEFAULT,
     stats: dict | None = None,
     max_bucket: int = SIM_MAX_BUCKET_DEFAULT,
@@ -473,12 +438,10 @@ def canonicalize(
     shared release handle — call :func:`release_caches` on either output
     after writing both.
     """
-    upstream: list = []
     mentions = mentions_from_triples(triples).cache()
     sim = similarity_edges(mentions, threshold=threshold, n_bands=n_bands,
-                           max_bucket=max_bucket, band_rows=band_rows,
-                           cache_registry=upstream)
-    comp = connected_components(sim, stats=stats, cache_registry=upstream)
+                           max_bucket=max_bucket, band_rows=band_rows)
+    comp = connected_components(sim, stats=stats)
     if stats is not None:
         stats["distinct_mentions"] = (
             mentions.select("norm").distinct().count())
@@ -500,8 +463,7 @@ def canonicalize(
     # m is materialized and lineage-cut: the mentions cache, similarity
     # persists and the final CC snapshot have no remaining consumers
     mentions.unpersist()
-    for rel in upstream:
-        rel()
+    release_caches(sim, comp)
     # canonical surface: most frequent, then longest, then lexicographic
     w = Window.partitionBy("component").orderBy(
         F.desc("freq"), F.desc(F.length("mention")), F.asc("mention")
@@ -558,7 +520,7 @@ def canonicalize(
 def incremental_assign(
     old_assign: DataFrame,
     new_mentions: DataFrame,
-    threshold: float = 0.55,
+    threshold: float = SIM_THRESHOLD_DEFAULT,
     n_bands: int = SIM_N_BANDS_DEFAULT,
     max_bucket: int = SIM_MAX_BUCKET_DEFAULT,
     hash_fn: str = "xxhash64",
@@ -607,24 +569,20 @@ def incremental_assign(
     all_norms = old_norms.unionByName(new_only)
     if stats is not None:
         stats["n_new_norms"] = new_only.count()
-    sim_caches: list = []
     sim = similarity_edges(
         all_norms, threshold=threshold, n_bands=n_bands,
         max_bucket=max_bucket, hash_fn=hash_fn, new_flag_col="is_new",
-        band_rows=band_rows, cache_registry=sim_caches,
+        band_rows=band_rows,
     )
     stars = (
         old_assign.where(F.col("norm") != F.col("component"))
         .select(F.col("component").alias("a"), F.col("norm").alias("b"))
     )
-    cc_caches: list = []
-    comp = connected_components(sim.unionByName(stars), stats=stats,
-                                cache_registry=cc_caches)
+    comp = connected_components(sim.unionByName(stars), stats=stats)
     # CC's first checkpoint cut the lineage from sim, and connected_
     # components has materialized past it — the similarity persists have
     # no remaining consumers
-    for rel in sim_caches:
-        rel()
+    release_caches(sim)
     out = (
         all_norms.select("norm")
         .join(comp, F.col("norm") == F.col("node"), "left")
@@ -633,5 +591,5 @@ def incremental_assign(
             F.coalesce("component", F.col("norm")).alias("component"),
         )
     )
-    out._canon_caches = cc_caches
+    out._canon_caches = getattr(comp, "_canon_caches", [])
     return out

@@ -172,36 +172,37 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, n_bands: int = 8, hash_fn: str = "md5"
-) -> DataFrame:
-    """(doc_id, band, sig): banded 1-row MinHash.
+def band_signature(shingles: Column, band: Column, band_rows: int,
+                   hash_fn: str) -> Column:
+    """MinHash signature of one LSH band over a shingle array — the one
+    place the signature formula lives (dedup and canonicalize both call it).
 
-    ``hash_fn='md5'`` → cross-engine-exact hex strings (oracle parity);
-    ``hash_fn='xxhash64'`` → 64-bit ints, the 100 TB path (no hex
-    materialization, half the shuffle bytes).
+    Row j of the band is an independent MinHash keyed by (band, j, shingle);
+    at r=1 by (band, shingle), the historical formula the DuckDB twins
+    interpolate.  ``hash_fn='md5'`` hashes the ``:``-joined strings
+    (cross-engine-identical hex); ``'xxhash64'`` hashes the values directly
+    (8-byte ints, no hex strings to shuffle).  At r=1 the signature is the
+    row minimum; at r>1 the r row minima are folded into one join key —
+    ``concat_ws('|')`` for md5, ``xxhash64`` for xxhash64 — so a bucket
+    collision needs all r to match (P = jaccard^r).
     """
-    bands = F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band")
-    salted = sh.select("doc_id", "shingle", bands)
-    if hash_fn == "md5":
-        h = F.md5(F.concat_ws(":", F.col("band").cast("string"), F.col("shingle")))
-    else:
-        h = F.xxhash64(F.col("band"), F.col("shingle"))
-    return (
-        salted.withColumn("h", h)
-        .groupBy("doc_id", "band")
-        .agg(F.min("h").alias("sig"))
-    )
+    def row_min(seed: list[int]) -> Column:
+        # built in a closure, never through a default argument: a
+        # two-parameter lambda is PySpark's (element, index) form of
+        # transform, which would bind the "default" to the index
+        if hash_fn == "md5":
+            key = [band.cast("string"), *[F.lit(str(j)) for j in seed]]
+            return F.array_min(F.transform(
+                shingles, lambda s: F.md5(F.concat_ws(":", *key, s))))
+        key = [band, *[F.lit(j) for j in seed]]
+        return F.array_min(F.transform(
+            shingles, lambda s: F.xxhash64(*key, s)))
 
-
-def _named_lambda(name: str, body):
-    """Single-arg higher-order-function lambda with an EXPLICIT variable
-    name.  PySpark derives the SQL lambda-variable name from the Python
-    parameter name, so two lambdas that share a parameter name inside one
-    projection mis-bind — results are wrong AND vary run to run (minimal
-    repro pinned in tests/test_dedup_cap.py).  Every multi-lambda
-    projection in this module routes through here."""
-    return eval(f"lambda {name}: body({name})", {"body": body})
+    if band_rows <= 1:
+        return row_min([])
+    minima = [row_min([j]) for j in range(band_rows)]
+    return (F.concat_ws("|", *minima) if hash_fn == "md5"
+            else F.xxhash64(*minima))
 
 
 # Default per-doc verification-set cap; the DuckDB oracle twin interpolates
@@ -275,45 +276,9 @@ def minhash_lsh_pairs(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh"),
     )
-    sh = F.col("sh")
-    if hash_fn == "md5":
-        if band_rows == 1:
-            # oracle-parity form: min over md5("band:shingle")
-            def _sig_of(b):
-                return F.array_min(F.transform(
-                    sh,
-                    lambda s: F.md5(F.concat_ws(":", b.cast("string"), s)),
-                ))
-        else:
-            def _sig_of(b):
-                minima = [
-                    F.array_min(F.transform(
-                        sh,
-                        _named_lambda(f"mh{j}", lambda s, jj=j, bb=b: F.md5(
-                            F.concat_ws(":", bb.cast("string"),
-                                        F.lit(str(jj)), s))),
-                    ))
-                    for j in range(band_rows)
-                ]
-                return F.concat_ws("|", *minima)
-    else:
-        if band_rows == 1:
-            def _sig_of(b):
-                return F.array_min(F.transform(
-                    sh, lambda s: F.xxhash64(b, s)))
-        else:
-            def _sig_of(b):
-                minima = [
-                    F.array_min(F.transform(
-                        sh,
-                        _named_lambda(f"xh{j}", lambda s, jj=j, bb=b:
-                                      F.xxhash64(bb * band_rows + F.lit(jj),
-                                                 s)),
-                    ))
-                    for j in range(band_rows)
-                ]
-                return F.xxhash64(*minima)
-    sigs = F.transform(F.sequence(F.lit(0), F.lit(n_bands - 1)), _sig_of)
+    sigs = F.transform(
+        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        lambda b: band_signature(F.col("sh"), b, band_rows, hash_fn))
     sig = base.select("doc_id", F.posexplode(sigs).alias("band", "sig"))
     # Hot-bucket guard (drop-before-pairing): members of an over-cap bucket
     # contribute no candidates from that band — true near-dups usually
@@ -573,41 +538,13 @@ def minhash_cluster_edges(
         "doc_id", "sh",
         F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
     )
-    # band_rows=1 uses the SAME hash formula as minhash_lsh_pairs so the
-    # two operators bucket identically at equal r — CC over star edges
-    # then equals CC over the all-pairs candidate graph (pytest-pinned).
-    if hash_fn == "md5":
-        if band_rows == 1:
-            h = F.array_min(F.transform(
-                F.col("sh"),
-                lambda s: F.md5(F.concat_ws(
-                    ":", F.col("band").cast("string"), s))))
-        else:
-            minima = [
-                F.array_min(F.transform(
-                    F.col("sh"),
-                    _named_lambda(f"cm{j}", lambda s, jj=j: F.md5(
-                        F.concat_ws(":", F.col("band").cast("string"),
-                                    F.lit(str(jj)), s))),
-                ))
-                for j in range(band_rows)
-            ]
-            h = F.concat_ws("|", *minima)
-    else:
-        if band_rows == 1:
-            h = F.array_min(F.transform(
-                F.col("sh"), lambda s: F.xxhash64(F.col("band"), s)))
-        else:
-            minima = [
-                F.array_min(F.transform(
-                    F.col("sh"),
-                    _named_lambda(f"cx{j}", lambda s, jj=j: F.xxhash64(
-                        F.col("band") * band_rows + F.lit(jj), s)),
-                ))
-                for j in range(band_rows)
-            ]
-            h = F.xxhash64(*minima)
-    sig = banded.select("doc_id", "band", h.alias("sig"))
+    # band_signature is shared with minhash_lsh_pairs, so the two
+    # operators bucket identically at equal r — CC over star edges then
+    # equals CC over the all-pairs candidate graph (pytest-pinned).
+    sig = banded.select(
+        "doc_id", "band",
+        band_signature(F.col("sh"), F.col("band"), band_rows,
+                       hash_fn).alias("sig"))
     rep = sig.groupBy("band", "sig").agg(F.min("doc_id").alias("rep"))
     edges = (
         sig.join(rep, ["band", "sig"])

@@ -20,10 +20,14 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from seq2kg_spark.operators.canonicalize import canonicalize
+from seq2kg_spark.operators.canonicalize import (SIM_BAND_ROWS_DEFAULT,
+                                                 SIM_MAX_BUCKET_DEFAULT,
+                                                 SIM_N_BANDS_DEFAULT,
+                                                 SIM_THRESHOLD_DEFAULT,
+                                                 canonicalize, release_caches)
 from seq2kg_spark.operators.extract import extract_triples
 from seq2kg_spark.operators.lineage import run_stage_checkpointed
 
@@ -40,8 +44,8 @@ def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
     is deterministic, so recomputing it on resume reproduces the killed
     run's decisions exactly.
 
-    Physical plan (the "decode-once barrier" shape — see
-    tools/curate_plan_ab.py and BASELINE.md round 7 for the shootout):
+    Physical plan (the "decode-once barrier" shape — see BASELINE.md
+    round 7 for the shootout):
     lang gate (cheap column predicate, pushes into the scan) → ONE
     projection of the html→text decode → hash shuffle on md5(text) →
     ``row_number`` window picks the min-``key_col`` winner per hash →
@@ -130,10 +134,6 @@ def run_kg_pipeline(
     *,
     n_buckets: int = 16,
     num_partitions: int | None = None,
-    canon_threshold: float = 0.55,
-    canon_n_bands: int | None = None,
-    canon_max_bucket: int | None = None,
-    canon_band_rows: int | None = None,
     extractor: str = "rule",
     extract_wave_size: int | None = 4,
 ) -> dict:
@@ -182,8 +182,6 @@ def run_kg_pipeline(
         else:
             t = extract_triples(cols, num_partitions=num_partitions)
         # re-derive the bucket from url: deterministic, survives the UDF
-        from pyspark.sql import functions as F
-
         return t.withColumn(
             "bucket",
             F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"),
@@ -211,8 +209,8 @@ def run_kg_pipeline(
     # leaves no marker and the rerun recomputes; a rerun over unchanged
     # triples skips the stage entirely.
     # Fingerprint = canonicalize PARAMS + CONTENT hash of the committed
-    # triples, not per-bucket row counts: a rerun with a different
-    # threshold/n_bands must NOT skip onto stale graph tables, and a
+    # triples, not per-bucket row counts: a rerun after the SIM_* constants
+    # change must NOT skip onto stale graph tables, and a
     # recomputed bucket can change content without changing its count.
     # The combiner must be order-independent AND multiplicity-sensitive:
     # a bare bit_xor of per-row hashes cancels even multiplicities.  An
@@ -240,18 +238,10 @@ def run_kg_pipeline(
              *[F.sum(f"l{k}").alias(f"s{k}") for k in range(4)])
         .collect()[0]
     )
-    from seq2kg_spark.operators.canonicalize import (SIM_BAND_ROWS_DEFAULT,
-                                                     SIM_MAX_BUCKET_DEFAULT,
-                                                     SIM_N_BANDS_DEFAULT)
-    if canon_max_bucket is None:
-        canon_max_bucket = SIM_MAX_BUCKET_DEFAULT
-    if canon_n_bands is None:
-        canon_n_bands = SIM_N_BANDS_DEFAULT
-    if canon_band_rows is None:
-        canon_band_rows = SIM_BAND_ROWS_DEFAULT
     extract_fp = (
-        f"v4|t={canon_threshold!r}|b={canon_n_bands}|m={canon_max_bucket}"
-        f"|r={canon_band_rows}|n={_agg['n']}|x={_agg['x']}"
+        f"v4|t={SIM_THRESHOLD_DEFAULT!r}|b={SIM_N_BANDS_DEFAULT}"
+        f"|m={SIM_MAX_BUCKET_DEFAULT}|r={SIM_BAND_ROWS_DEFAULT}"
+        f"|n={_agg['n']}|x={_agg['x']}"
         f"|s={_agg['s0']},{_agg['s1']},{_agg['s2']},{_agg['s3']}"
     )
     # one-row parquet, not a local file: workdir may be HDFS/S3
@@ -272,16 +262,12 @@ def run_kg_pipeline(
         canon_stats["wall_ms"] = 0
     else:
         t0 = time.monotonic()
-        nodes, edges = canonicalize(
-            triples, threshold=canon_threshold, n_bands=canon_n_bands,
-            max_bucket=canon_max_bucket, band_rows=canon_band_rows,
-            stats=canon_stats)
+        nodes, edges = canonicalize(triples, stats=canon_stats)
         nodes.write.mode("overwrite").parquet(nodes_path)
         edges.write.mode("overwrite").parquet(edges_path)
         # both outputs are on disk — drop the naming-chain checkpoints so
         # a long-lived session running pipelines back-to-back doesn't
         # accumulate cached blocks
-        from seq2kg_spark.operators.canonicalize import release_caches
         release_caches(nodes, edges)
         canon_stats["wall_ms"] = int((time.monotonic() - t0) * 1000)
         spark.createDataFrame([(extract_fp,)], "fp string").coalesce(

@@ -62,7 +62,7 @@ def _lsh_bucketed_topk_literal(emb, query_ids, k=5, dim=64, n_bits=8,
         .select("query_id", "qv", F.col("vid").alias("neighbor_id"),
                 F.col("v").alias("cv"))
         .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", float_cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cosine", float_cosine("qv", "cv"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("neighbor_id"))

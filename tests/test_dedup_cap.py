@@ -107,38 +107,37 @@ def test_ngram_df_cap_drops_stop_shingles(spark):
 
 
 def test_multi_lambda_projection_binding_pitfall(spark):
-    """PySpark names a HOF lambda's SQL variable after the PYTHON parameter
-    name; two lambdas sharing a name in one projection mis-bind (wrong and
-    run-to-run-varying results).  This pins the repro AND that dedup's
-    _named_lambda factory produces the hand-computable answer."""
+    """band_signature puts r row lambdas into one projection; each must
+    bind its own row seed (pinned against hashlib at md5 r=1 and r=2).
+    A Python default argument cannot carry the seed: a two-parameter
+    lambda is transform's (element, index) form, so the "default" is
+    bound to the index."""
     import hashlib
 
     import pyspark.sql.functions as F
 
-    from seq2kg_spark.operators.dedup import _named_lambda
+    from seq2kg_spark.operators.dedup import band_signature
 
-    df = spark.createDataFrame([(i, ["a", "b", "c"]) for i in range(4)],
+    sh = ["a", "b", "c"]
+    df = spark.createDataFrame([(band, sh) for band in range(4)],
                                "band int, sh array<string>")
-    minima = [
-        F.array_min(F.transform(
-            F.col("sh"),
-            _named_lambda(f"v{j}", lambda s, jj=j: F.md5(F.concat_ws(
-                ":", F.col("band").cast("string"), F.lit(str(jj)), s))),
-        ))
-        for j in range(2)
-    ]
-    got = sorted(map(tuple, df.select(
-        "band", F.concat_ws("|", *minima).alias("x")).collect()))
-    exp = sorted(
-        (band, "|".join(
-            min(hashlib.md5(f"{band}:{j}:{s}".encode()).hexdigest()
-                for s in ["a", "b", "c"])
-            for j in range(2)))
-        for band in range(4)
-    )
-    assert got == exp
-    assert got == sorted(map(tuple, df.select(
-        "band", F.concat_ws("|", *minima).alias("x")).collect()))
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    exp = {
+        1: [(band, min(md5(f"{band}:{s}") for s in sh)) for band in range(4)],
+        2: [(band, "|".join(min(md5(f"{band}:{j}:{s}") for s in sh)
+                            for j in range(2)))
+            for band in range(4)],
+    }
+    for r, want in exp.items():
+        sig = band_signature(F.col("sh"), F.col("band"), r, "md5")
+        got = sorted(map(tuple, df.select("band", sig).collect()))
+        assert got == want, r
+
+    row = df.select(F.transform("sh", lambda s, seed=7: seed).alias("x"))
+    assert row.first()["x"] == [0, 1, 2]
 
 
 def test_cluster_edges_components_equal_pairs_components(spark):

@@ -39,8 +39,8 @@ def test_int_dot_flat_matches_hof(spark):
         "a array<double>, b array<double>",
     ).select(quantized(F.col("a")).alias("qa"), quantized(F.col("b")).alias("qb"))
     got = df.select(
-        int_dot(F.col("qa"), F.col("qb")).alias("hof"),
-        int_dot(F.col("qa"), F.col("qb"), dim=16).alias("flat"),
+        int_dot("qa", "qb").alias("hof"),
+        int_dot("qa", "qb", dim=16).alias("flat"),
     ).collect()
     assert all(r["hof"] == r["flat"] for r in got)
 
@@ -53,12 +53,28 @@ def test_int_dot_mismatched_length_falls_back(spark):
         "a array<long>, b array<long>",
     )
     got = df.select(
-        int_dot(F.col("a"), F.col("b")).alias("hof"),
-        int_dot(F.col("a"), F.col("b"), dim=3).alias("flat"),
+        int_dot("a", "b").alias("hof"),
+        int_dot("a", "b", dim=3).alias("flat"),
     ).collect()
     # equal-length row: flat == hof; short row: flat takes the fallback
     # branch, so the two columns agree row-by-row
     assert all(r["hof"] == r["flat"] for r in got)
+
+
+def test_dot_products_quote_column_names(spark):
+    """Names are backticked: a dot in a column name is part of the name,
+    not a struct-field path."""
+    from seq2kg_spark.operators.ann import float_cosine, int_dot
+
+    df = spark.createDataFrame([([1, 2, 3], [4, 5, 6])],
+                               "`q.v` array<long>, `c v` array<long>")
+    row = df.select(
+        int_dot("q.v", "c v").alias("hof"),
+        int_dot("q.v", "c v", dim=3).alias("flat"),
+        float_cosine("q.v", "q.v", dim=3).alias("cos"),
+    ).first()
+    assert row["hof"] == row["flat"] == 32
+    assert row["cos"] == pytest.approx(1.0)
 
 
 def test_wide_dim_uses_hof_form(spark):
@@ -67,9 +83,10 @@ def test_wide_dim_uses_hof_form(spark):
     from seq2kg_spark.operators.ann import FLAT_INT_MAX_DIM, int_dot
 
     dim = FLAT_INT_MAX_DIM + 1
-    a = F.array_repeat(F.lit(2).cast("long"), dim)
-    df = spark.range(1).select(int_dot(a, a, dim=dim).alias("dot"))
-    assert df.collect()[0]["dot"] == 4 * dim
+    df = spark.range(1).select(
+        F.array_repeat(F.lit(2).cast("long"), dim).alias("a"))
+    assert df.select(int_dot("a", "a", dim=dim).alias("dot")) \
+        .collect()[0]["dot"] == 4 * dim
 
 
 def test_float_cosine_flat_bit_exact(spark):
@@ -82,8 +99,8 @@ def test_float_cosine_flat_bit_exact(spark):
         "a array<double>, b array<double>",
     )
     got = df.select(
-        float_cosine(F.col("a"), F.col("b")).alias("hof"),
-        float_cosine(F.col("a"), F.col("b"), dim=24).alias("flat"),
+        float_cosine("a", "b").alias("hof"),
+        float_cosine("a", "b", dim=24).alias("flat"),
     ).collect()
     # left-deep flat sum preserves the fold's accumulation order ⇒ the
     # doubles must be IDENTICAL, not merely close

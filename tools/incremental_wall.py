@@ -34,15 +34,14 @@ def full_assign(spark, norms):
     from seq2kg_spark.operators.canonicalize import (connected_components,
                                                      similarity_edges)
 
-    caches: list = []
-    sim = similarity_edges(norms, cache_registry=caches)
-    comp = connected_components(sim, cache_registry=caches)
+    sim = similarity_edges(norms)
+    comp = connected_components(sim)
     out = (
         norms.join(comp, F.col("norm") == F.col("node"), "left")
         .select("norm",
                 F.coalesce("component", F.col("norm")).alias("component"))
     )
-    return out, caches
+    return out, (sim, comp)
 
 
 def main():
@@ -81,8 +80,7 @@ def main():
     old_assign = old_assign.persist()
     old_assign.count()
     wall_old = time.monotonic() - t0
-    for rel in c0:
-        rel()
+    release_caches(*c0)
     print(f"old full assign: {wall_old:.1f}s", flush=True)
 
     # (b) incremental merge of the batch
@@ -101,8 +99,7 @@ def main():
     full = full.persist()
     n_full = full.count()
     wall_full = time.monotonic() - t0
-    for rel in c2:
-        rel()
+    release_caches(*c2)
     print(f"union full recompute: {wall_full:.1f}s rows={n_full}",
           flush=True)
 
