@@ -25,20 +25,21 @@ canonicalization is our scale addition (SURVEY.md §7 step 6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from seq2kg_spark.operators.dedup import band_signature
+from seq2kg_spark.operators.dedup import lsh_bucket_pairs
 
 
 # --------------------------------------------------------------------------
 # Cache lifetime management.
 #
-# Everything this module persists (two .persist()s in similarity_edges, the
-# per-round localCheckpoints in connected_components, the two naming-chain
-# localCheckpoints in canonicalize) is released as soon as its last consumer
-# has MATERIALIZED — mid-computation where possible, otherwise through a
-# release handle attached to the returned DataFrame(s).  Without this, a
+# Everything this module persists (the norm shingle-set .persist() in
+# similarity_edges, the input and per-round localCheckpoints in
+# connected_components, the two naming-chain localCheckpoints in
+# canonicalize) is released as soon as its last consumer has MATERIALIZED
+# — mid-computation where possible, otherwise through a release handle
+# attached to the returned DataFrame(s).  Without this, a
 # long-lived session calling canonicalize / incremental_assign per batch
 # (the streaming use case) accumulates cached blocks per invocation and
 # leans on LRU eviction under memory pressure.
@@ -130,7 +131,7 @@ def _char_shingles(col, k: int = 3):
     )
 
 
-# Hot-bucket cap on the (band, sig) self-join; the DuckDB oracle twin
+# Hot-bucket cap on (band, sig) candidate pairing; the DuckDB oracle twin
 # interpolates this same constant (pattern: dedup.MAX_BUCKET_DEFAULT).
 #
 # 1k, not 10k: a bucket at the cap costs O(cap²) candidate rows, and on a
@@ -176,12 +177,12 @@ def similarity_edges(
     banded MinHash over char k-shingles, verified by Jaccard ≥ threshold.
     Returns (a, b) string pairs with a < b.
 
-    The two internal ``persist()``s (norm shingle sets, banded signatures)
-    back the returned plan lazily, so they cannot be unpersisted here.
-    Their release handles go onto the returned DataFrame's
-    ``_canon_caches`` for :func:`release_caches` after materialization
-    (canonicalize / incremental_assign release them as soon as the edge
-    set is cut from this lineage).
+    The internal ``persist()`` of the norm shingle sets (read by the
+    signatures and both verify sides) backs the returned plan lazily, so
+    it cannot be unpersisted here.  Its release handle goes onto the
+    returned DataFrame's ``_canon_caches`` for :func:`release_caches`
+    after materialization (canonicalize / incremental_assign release it
+    once connected_components has checkpointed the edge set).
 
     ``band_rows`` (r): MinHash rows per band.  A (band, sig) bucket
     collides with probability jaccard^r, so r=1 degenerates on
@@ -193,15 +194,15 @@ def similarity_edges(
     stay hash-exact (tools/zipf_recall_study.py is the recall/cost
     evidence per (cap, r) on both corpus shapes).
 
-    ``max_bucket`` is the skew guard on the LSH self-join: a (band, sig)
-    bucket of n members emits n² candidate rows, so one hot signature
+    ``max_bucket`` is the skew guard on LSH candidate pairing: a (band,
+    sig) bucket of n members emits n² candidate rows, so one hot signature
     (short mentions share few shingles — "inc", "llc", digit strings) can
     go quadratic at web scale.  Buckets over the cap are dropped before
-    the join — their members simply contribute no candidates from that
+    pairing — their members simply contribute no candidates from that
     band (they usually collide in a calmer band too; the exact-norm
     grouping and the CC transitive closure still connect identical and
-    chained mentions).  The cap bounds the join at
-    O(n_bands · max_bucket²) rows per bucket, never O(|mentions|²).
+    chained mentions).  The cap bounds the in-bucket pair expansion at
+    O(max_bucket²) rows per (band, sig) bucket, never O(|mentions|²).
     """
     if new_flag_col is None:
         norms = mentions.select("norm").distinct()
@@ -232,32 +233,18 @@ def similarity_edges(
     # narrow transform + array_min.  xxhash64 (8-byte ints, JVM-side) is
     # the scale path; md5 hex strings are cross-engine-identical for the
     # DuckDB oracle twin (string min is lexicographic in both engines).
-    banded = norm_sets.select(
-        "norm", *flag, "shingles",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    )
-    h = band_signature(F.col("shingles"), F.col("band"), band_rows, hash_fn)
-    # keep the persisted handle (sig is reassigned below) for the release
-    sig_raw = banded.select("norm", *flag, "band", h.alias("sig")).persist()
-    sig = sig_raw
-    bucket_ok = (
-        sig.groupBy("band", "sig")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") <= max_bucket)
-        .select("band", "sig")
-    )
-    sig = sig.join(bucket_ok, ["band", "sig"])
-    cand = (
-        sig.alias("x")
-        .join(sig.alias("y"), ["band", "sig"])
-        .where(F.col("x.norm") < F.col("y.norm"))
+    # The bucket shape is dedup's (lsh_bucket_pairs); in incremental mode
+    # the member carries the new flag so old-old pairs can be dropped (the
+    # filter is pushed below the pairs' dropDuplicates).  Norms are
+    # distinct, so the struct order is the norm order.
+    cand = lsh_bucket_pairs(
+        norm_sets, F.struct("norm", *flag) if new_flag_col else F.col("norm"),
+        F.col("shingles"), n_bands=n_bands, band_rows=band_rows,
+        hash_fn=hash_fn, max_bucket=max_bucket,
     )
     if new_flag_col:
-        cand = cand.where(F.col("x._new") | F.col("y._new"))
-    cand = (
-        cand.select(F.col("x.norm").alias("a"), F.col("y.norm").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+        cand = cand.where(F.col("a._new") | F.col("b._new")).select(
+            F.col("a.norm").alias("a"), F.col("b.norm").alias("b"))
     extra_releases = []
     if stats is not None:
         # telemetry for cap/band tuning studies — costs one extra action
@@ -285,15 +272,13 @@ def similarity_edges(
         )
         .select("a", "b")
     )
-    out._canon_caches = [norm_sets.unpersist, sig_raw.unpersist,
-                         *extra_releases]
+    out._canon_caches = [norm_sets.unpersist, *extra_releases]
     return out
 
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
-    checkpoint_every: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """Alternating large-star / small-star connected components.
@@ -301,18 +286,24 @@ def connected_components(
     ``edges``: (a, b) — any orientation, any dtype with total order.
     Returns (node, component) with component = min member of the component.
 
-    Each round is two groupBy shuffles over the edge set; convergence in
-    O(log n) rounds.  ``localCheckpoint`` truncates lineage so round k+1's
-    plan doesn't embed rounds 1..k (mandatory at scale).
+    Each round is two groupBy shuffles over the edge set plus the small
+    star's dedup; convergence in O(log n) rounds.  ``localCheckpoint``
+    truncates lineage so round k+1's plan doesn't embed rounds 1..k
+    (mandatory at scale), and the deduplicated INPUT is checkpointed
+    before the loop: round 1 reads it four times (each star reads its
+    input twice, the small star reads the large star's output twice), so
+    a lazy input — similarity_edges' LSH join and verify — would otherwise
+    be planned and run again per reference.  The convergence key (edge
+    count, order-insensitive hash) is observed on the job that writes
+    each round's checkpoint, not computed by a separate action.
 
-    Cache lifetime: round k's checkpoint blocks are released as soon as
-    round k+1's checkpoint has materialized (previously every round's edge
-    snapshot stayed resident for the whole loop).  The FINAL round's blocks
-    back the returned mapping lazily, so their release handle goes onto
-    the result's ``_canon_caches`` (:func:`release_caches` after
-    materialization).
+    Cache lifetime: the input checkpoint and round k's checkpoint blocks
+    are released as soon as the next round's checkpoint has materialized
+    (previously every round's edge snapshot stayed resident for the whole
+    loop).  The FINAL round's blocks back the returned mapping lazily, so
+    their release handle goes onto the result's ``_canon_caches``
+    (:func:`release_caches` after materialization).
     """
-    spark = edges.sparkSession
     # undirected, deduped, self-loops dropped
     e = (
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -356,37 +347,31 @@ def connected_components(
                     ).alias("y"),
                 )
             )
-        out = (
-            pairs.select(
-                F.least(F.col("y"), F.col("m")).alias("u"),
-                F.greatest(F.col("y"), F.col("m")).alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .dropDuplicates(["u", "v"])
-        )
-        return out
+        out = pairs.select(
+            F.least(F.col("y"), F.col("m")).alias("u"),
+            F.greatest(F.col("y"), F.col("m")).alias("v"),
+        ).where(F.col("u") != F.col("v"))
+        # the large star's duplicates need no exchange of their own: the
+        # small star reads its input as collect_set neighbour sets
+        return out if large else out.dropDuplicates(["u", "v"])
 
+    e, prev_release = _tracked_local_checkpoint(e)
     prev_hash = None
     converged = False
-    prev_release = None
-    final_release = None
     for i in range(max_iter):
-        e = star(e, large=True)
-        e = star(e, large=False)
-        if checkpoint_every and (i % checkpoint_every == 0):
-            e, rel = _tracked_local_checkpoint(e)
-            if prev_release is not None:
-                # the new checkpoint is materialized and lineage-cut, so
-                # the previous round's snapshot has no remaining consumer
-                prev_release()
-            prev_release = final_release = rel
-        h = (
-            e.agg(
-                F.count("*").alias("n"),
-                # bit_xor: order-insensitive, cannot overflow (ANSI mode)
-                F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-            ).collect()[0]
-        )
+        e = star(star(e, large=True), large=False)
+        obs = Observation()
+        e, rel = _tracked_local_checkpoint(e.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            # bit_xor: order-insensitive, cannot overflow (ANSI mode)
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+        ))
+        # the new checkpoint is materialized and lineage-cut, so the
+        # previous snapshot (the input, from round 1) has no consumer left
+        prev_release()
+        prev_release = rel
+        h = obs.get
         cur = (h["n"], h["h"])
         if stats is not None:
             stats["cc_rounds"] = i + 1
@@ -396,6 +381,7 @@ def connected_components(
             break
         prev_hash = cur
     if not converged:
+        prev_release()
         # A non-fixpoint edge set is NOT a star forest; min(component) would
         # silently return a wrong mapping. Fail loudly instead.
         raise RuntimeError(
@@ -410,8 +396,7 @@ def connected_components(
     out = comp.unionByName(roots).groupBy("node").agg(
         F.min("component").alias("component")
     )
-    if final_release is not None:
-        out._canon_caches = [final_release]
+    out._canon_caches = [prev_release]
     return out
 
 
@@ -431,17 +416,21 @@ def canonicalize(
     ``max_bucket`` is the LSH hot-bucket cap, ``n_bands``/``band_rows``
     the banded-MinHash shape (similarity_edges).
 
-    Cache lifetime: the mentions cache, the similarity-edge persists and
-    every CC round snapshot are released BEFORE this returns (the eager
-    naming-chain checkpoint is the last consumer of all of them).  The two
-    checkpoints that back the returned ``nodes``/``edges`` lazily carry a
-    shared release handle — call :func:`release_caches` on either output
-    after writing both.
+    Cache lifetime: the similarity-edge persist is released as soon as
+    CC returns (its input checkpoint is the last consumer); the mentions
+    cache and every CC snapshot are released BEFORE this returns (the
+    eager naming-chain checkpoint is the last consumer of all of them).
+    The two checkpoints that back the returned ``nodes``/``edges`` lazily
+    carry a shared release handle — call :func:`release_caches` on either
+    output after writing both.
     """
     mentions = mentions_from_triples(triples).cache()
     sim = similarity_edges(mentions, threshold=threshold, n_bands=n_bands,
                            max_bucket=max_bucket, band_rows=band_rows)
     comp = connected_components(sim, stats=stats)
+    # CC checkpointed the edge set before its first round, so the
+    # similarity persist has no remaining consumer
+    release_caches(sim)
     if stats is not None:
         stats["distinct_mentions"] = (
             mentions.select("norm").distinct().count())
@@ -460,10 +449,10 @@ def canonicalize(
     # (measured: the 500k-page canonicalize stage spent most of its 179 s
     # recomputing this naming chain per action).
     m, m_release = _tracked_local_checkpoint(mentions.join(norm_comp, "norm"))
-    # m is materialized and lineage-cut: the mentions cache, similarity
-    # persists and the final CC snapshot have no remaining consumers
+    # m is materialized and lineage-cut: the mentions cache and the final
+    # CC snapshot have no remaining consumers
     mentions.unpersist()
-    release_caches(sim, comp)
+    release_caches(comp)
     # canonical surface: most frequent, then longest, then lexicographic
     w = Window.partitionBy("component").orderBy(
         F.desc("freq"), F.desc(F.length("mention")), F.asc("mention")
@@ -552,7 +541,7 @@ def incremental_assign(
     pipeline: growth never un-merges an entity.
 
     Cache lifetime (the repeated-invocation path — this runs per batch in
-    a long-lived session): the similarity persists and all intermediate CC
+    a long-lived session): the similarity persist and all intermediate CC
     snapshots are released before this returns; the final CC snapshot backs
     the returned mapping lazily, so it carries the release handle — call
     :func:`release_caches` on the result after materializing it.
@@ -579,9 +568,8 @@ def incremental_assign(
         .select(F.col("component").alias("a"), F.col("norm").alias("b"))
     )
     comp = connected_components(sim.unionByName(stars), stats=stats)
-    # CC's first checkpoint cut the lineage from sim, and connected_
-    # components has materialized past it — the similarity persists have
-    # no remaining consumers
+    # CC's input checkpoint cut the lineage from sim — the similarity
+    # persist has no remaining consumer
     release_caches(sim)
     out = (
         all_norms.select("norm")

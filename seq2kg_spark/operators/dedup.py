@@ -209,12 +209,81 @@ def band_signature(shingles: Column, band: Column, band_rows: int,
 # this same constant so the `approx` flag can never silently drift from it.
 MAX_SHINGLES_DEFAULT = 2048
 
-# (band, sig) hot-bucket cap for the LSH self-join: a bucket of n members
-# emits n² candidate rows, so one hot signature (template pages, empty or
-# boilerplate-identical docs) goes quadratic at web scale.  Buckets over
-# the cap are dropped before the join — same guard, same constant shape as
-# canonicalize.similarity_edges; the oracle twin interpolates it.
+# (band, sig) hot-bucket cap for LSH candidate pairing: a bucket of n
+# members emits n² candidate rows, so one hot signature (template pages,
+# empty or boilerplate-identical docs) goes quadratic at web scale.
+# Buckets over the cap are dropped before pairing (lsh_bucket_pairs, the
+# builder canonicalize.similarity_edges shares); the oracle twin
+# interpolates it.
 MAX_BUCKET_DEFAULT = 10_000
+
+
+def lsh_bucket_pairs(
+    df: DataFrame,
+    member: Column,
+    shingles: Column,
+    n_bands: int,
+    band_rows: int,
+    hash_fn: str,
+    max_bucket: int,
+) -> DataFrame:
+    """LSH candidate pairs: (a, b) with a < b, distinct, for every two
+    ``member`` values of ``df`` that share a (band, sig) bucket of at most
+    ``max_bucket`` members — the one candidate builder behind
+    :func:`minhash_lsh_pairs` and ``canonicalize.similarity_edges``.
+
+    ``shingles`` is each row's shingle array (signatures via
+    :func:`band_signature`); ``member`` any orderable column, a struct
+    when the caller needs more than the id on both sides of a pair.
+
+    All n_bands signatures are computed in ONE projection (an array over
+    the band sequence, posexploded after), then a single groupBy(band,
+    sig) → collect_list → in-bucket pair expansion.  The former shape
+    (groupBy count for the bucket cap + join back + self-join on (band,
+    sig)) evaluated the whole shingle→signature pipeline THREE times (x
+    side, y side, cap) and paid three exchanges; this shape evaluates it
+    once and pays one exchange before dropDuplicates — measured 35s → 20s
+    for dedup at sf1.0, with bit-identical pairs on both hash paths.
+    """
+    sigs = F.transform(
+        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        lambda b: band_signature(shingles, b, band_rows, hash_fn))
+    sig = df.select(member.alias("m"),
+                    F.posexplode(sigs).alias("band", "sig"))
+    # Hot-bucket guard (drop-before-pairing): members of an over-cap bucket
+    # contribute no candidates from that band — true near-dups usually
+    # collide in a calmer band too.  Bounds pair expansion at
+    # O(max_bucket²) rows per bucket, never O(|df|²) for one hot
+    # signature.
+    #
+    # The cap is a window COUNT over (band, sig), applied BEFORE the
+    # collect_list: a hot bucket is dropped without ever materializing its
+    # member list in an aggregation buffer (a collect-then-filter cap
+    # would build an O(bucket) in-memory array first — executor OOM bait
+    # at web scale; the window exec buffers through a spillable sorter).
+    # The window and the groupBy share one (band, sig) exchange, and this
+    # shape also measured faster than collect-then-filter at sf1.0
+    # (8.6s → 7.3s for the candidate stage).
+    wb = Window.partitionBy("band", "sig")
+    sig = (
+        sig.withColumn("_n", F.count("*").over(wb))
+        .where(F.col("_n") <= max_bucket)
+        .drop("_n")
+    )
+    ms = F.col("ms")
+    pair_arr = F.flatten(F.transform(
+        ms,
+        lambda a: F.transform(
+            F.filter(ms, lambda b: b > a),
+            lambda c: F.struct(a.alias("a"), c.alias("b")),
+        ),
+    ))
+    return (
+        sig.groupBy("band", "sig").agg(F.collect_list("m").alias("ms"))
+        .select(F.explode(pair_arr).alias("p"))
+        .select("p.a", "p.b")
+        .dropDuplicates(["a", "b"])
+    )
 
 
 def minhash_lsh_pairs(
@@ -242,8 +311,8 @@ def minhash_lsh_pairs(
     ``approx = true`` (two over-cap docs differing only past the cap can
     estimate 1.0; the flag makes that visible instead of silently exact).
 
-    ``max_bucket`` caps the (band, sig) bucket width fed to the candidate
-    self-join — see :data:`MAX_BUCKET_DEFAULT`.
+    ``max_bucket`` caps the (band, sig) bucket width fed to candidate
+    pairing — see :data:`MAX_BUCKET_DEFAULT`.
 
     ``band_rows`` (r) is the LSH sharpness knob: a band's signature is the
     combination of r independent min-hashes, so two docs collide in a band
@@ -259,63 +328,17 @@ def minhash_lsh_pairs(
     """
     # Set-based formulation: the distinct-shingle ARRAY (the source of
     # both the signatures and the verification set) is built once per row
-    # and never exploded — all n_bands signatures are computed in ONE
-    # projection (an array over the band sequence, posexploded after), so
-    # the only shuffled rows in the whole operator are the (doc, band, sig)
-    # triples, the candidate pairs, and the capped verification sets.
-    #
-    # Candidate generation is a single groupBy(band, sig) → collect_list →
-    # in-bucket pair expansion.  The former shape (groupBy count for the
-    # bucket cap + join back + self-join on (band, sig)) evaluated the
-    # whole shingle→signature pipeline THREE times (x side, y side, cap)
-    # and paid three exchanges; this shape evaluates it once and pays one
-    # exchange before dropDuplicates — measured 35s → 20s at sf1.0
-    # (99s → 20s including the word_shingles lambda-binding fix), with
-    # bit-identical pairs on both hash paths.
+    # and never exploded, so the only shuffled rows in the whole operator
+    # are the (doc, band, sig) triples, the candidate pairs, and the capped
+    # verification sets (candidate shape: :func:`lsh_bucket_pairs`).
     base = df.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh"),
     )
-    sigs = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: band_signature(F.col("sh"), b, band_rows, hash_fn))
-    sig = base.select("doc_id", F.posexplode(sigs).alias("band", "sig"))
-    # Hot-bucket guard (drop-before-pairing): members of an over-cap bucket
-    # contribute no candidates from that band — true near-dups usually
-    # collide in a calmer band too, and exact duplicates are dedup_exact's
-    # job.  Bounds pair expansion at O(n_bands · max_bucket²) rows per
-    # bucket, never O(|corpus|²) for one hot signature.
-    #
-    # The cap is a window COUNT over (band, sig), applied BEFORE the
-    # collect_list: a hot bucket is dropped without ever materializing its
-    # member list in an aggregation buffer (a collect-then-filter cap
-    # would build an O(bucket) in-memory array first — executor OOM bait
-    # at web scale; the window exec buffers through a spillable sorter).
-    # The window and the groupBy share one (band, sig) exchange, and this
-    # shape also measured faster than collect-then-filter at sf1.0
-    # (8.6s → 7.3s for the candidate stage).
-    wb = Window.partitionBy("band", "sig")
-    sig = (
-        sig.withColumn("_n", F.count("*").over(wb))
-        .where(F.col("_n") <= max_bucket)
-        .drop("_n")
-    )
-    buckets = sig.groupBy("band", "sig").agg(
-        F.collect_list("doc_id").alias("ids")
-    )
-    ids = F.col("ids")
-    pair_arr = F.flatten(F.transform(
-        ids,
-        lambda a: F.transform(
-            F.filter(ids, lambda b: b > a),
-            lambda c: F.struct(a.alias("doc_a"), c.alias("doc_b")),
-        ),
-    ))
-    cand = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = lsh_bucket_pairs(
+        base, F.col("doc_id"), F.col("sh"), n_bands=n_bands,
+        band_rows=band_rows, hash_fn=hash_fn, max_bucket=max_bucket,
+    ).withColumnsRenamed({"a": "doc_a", "b": "doc_b"})
     # Verification via per-doc shingle SETS + array_intersect: the naive
     # candidates×shingles join explodes to |cand| × avg-shingles rows; the
     # set join is |cand| rows with a vectorized JVM intersect per row, and

@@ -263,10 +263,13 @@ def sessionize_events_stateful(
                 state.update((ss, last, n, sv))
                 if idle_timeout:
                     state.setTimeoutDuration(gap_seconds * 1000)
-        yield pd.DataFrame(
-            rows, columns=["user_id", "session_start", "session_end",
-                           "n_events", "sum_value"],
-        )
+        # no closed session → no frame (an empty one adds no rows, only
+        # an object-dtype entry to pyspark's per-batch concat)
+        if rows:
+            yield pd.DataFrame(
+                rows, columns=["user_id", "session_start", "session_end",
+                               "n_events", "sum_value"],
+            )
 
     timeout_conf = (GroupStateTimeout.ProcessingTimeTimeout if idle_timeout
                     else GroupStateTimeout.NoTimeout)

@@ -1,13 +1,17 @@
 """Connected components + canonicalization."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from seq2kg_spark.operators.canonicalize import (
+    _char_shingles,
     canonicalize,
     connected_components,
+    release_caches,
     similarity_edges,
     mentions_from_triples,
 )
+from seq2kg_spark.operators.dedup import band_signature, lsh_bucket_pairs
 
 
 def _cc(spark, pairs):
@@ -80,3 +84,76 @@ def test_similarity_edges_hot_bucket_guard(spark):
     m = mentions_from_triples(triples)
     assert similarity_edges(m, threshold=0.5).count() > 0
     assert similarity_edges(m, threshold=0.5, max_bucket=1).count() == 0
+
+
+# Norm families with ONE shared shingle set ({aba, bab} / {cdc, dcd}):
+# each family is one (band, sig) bucket in every band, whatever the hash.
+AT_CAP = ["abab", "baba", "ababa"]
+OVER_CAP = ["cdcd", "dcdc", "cdcdc", "dcdcd"]
+NEW = {"baba", "cdcd", "globex corp"}
+NORMS = AT_CAP + OVER_CAP + [
+    "globex corporation", "globex corporations", "globex corp",
+    "initech systems", "initech system"]
+
+
+def _ref_guarded_self_join(spark, hash_fn, band_rows, n_bands, cap, flag):
+    """The former candidate shape, kept here as the reference: signature
+    rows per (norm, band), bucket count <= cap, join back, self-join on
+    (band, sig) with x < y (and, in incremental mode, x or y new)."""
+    norms = spark.createDataFrame(
+        [(n, n in NEW) for n in NORMS], "norm string, _new boolean")
+    sig = norms.select(
+        "norm", "_new",
+        F.array_sort(_char_shingles(F.col("norm"))).alias("sh"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
+    ).select("norm", "_new", "band", band_signature(
+        F.col("sh"), F.col("band"), band_rows, hash_fn).alias("sig"))
+    ok = (sig.groupBy("band", "sig").count()
+          .where(F.col("count") <= cap).select("band", "sig"))
+    sig = sig.join(ok, ["band", "sig"])
+    cand = (sig.alias("x").join(sig.alias("y"), ["band", "sig"])
+            .where(F.col("x.norm") < F.col("y.norm")))
+    if flag:
+        cand = cand.where(F.col("x._new") | F.col("y._new"))
+    return {(r.a, r.b) for r in cand.select(
+        F.col("x.norm").alias("a"), F.col("y.norm").alias("b")).collect()}
+
+
+@pytest.mark.parametrize("hash_fn,band_rows,n_bands",
+                         [("md5", 1, 6), ("xxhash64", 4, 32)])
+def test_lsh_bucket_builder_matches_guarded_self_join(
+        spark, hash_fn, band_rows, n_bands):
+    """The shared dedup/canonicalize bucket builder (window-count cap →
+    one groupBy(band, sig) → in-bucket pairs) yields exactly the pairs of
+    the former guarded self-join: a bucket AT the cap is kept, one over it
+    dropped, and in incremental mode old-old pairs are dropped.  At
+    threshold 0 the Jaccard verify passes every candidate, so
+    similarity_edges returns the candidate set itself."""
+    cap = len(AT_CAP)
+    shape = dict(n_bands=n_bands, band_rows=band_rows, hash_fn=hash_fn,
+                 max_bucket=cap)
+    ref = _ref_guarded_self_join(spark, hash_fn, band_rows, n_bands, cap,
+                                 flag=False)
+    assert {("abab", "ababa"), ("abab", "baba"), ("ababa", "baba")} <= ref
+    assert not any(a in OVER_CAP for a, _b in ref)
+
+    norms = spark.createDataFrame([(n,) for n in NORMS], "norm string")
+    sets = norms.select(
+        "norm", F.array_sort(_char_shingles(F.col("norm"))).alias("sh"))
+    direct = lsh_bucket_pairs(sets, F.col("norm"), F.col("sh"), **shape)
+    assert {(r.a, r.b) for r in direct.collect()} == ref
+
+    sim = similarity_edges(norms, threshold=0.0, **shape)
+    assert {(r.a, r.b) for r in sim.collect()} == ref
+    release_caches(sim)
+
+    ref_new = _ref_guarded_self_join(spark, hash_fn, band_rows, n_bands,
+                                     cap, flag=True)
+    assert ("abab", "baba") in ref_new
+    assert ("abab", "ababa") not in ref_new
+    flagged = spark.createDataFrame(
+        [(n, n in NEW) for n in NORMS], "norm string, is_new boolean")
+    sim = similarity_edges(flagged, threshold=0.0, new_flag_col="is_new",
+                           **shape)
+    assert {(r.a, r.b) for r in sim.collect()} == ref_new
+    release_caches(sim)

@@ -53,3 +53,23 @@ def test_non_convergence_raises(spark):
         F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iter=1)
+
+
+def test_lazy_input_evaluated_once(spark):
+    # Round 1 references the input four times; CC checkpoints it first,
+    # so a lazy input plan (in production: the LSH join + Jaccard verify)
+    # runs once.  A Python UDF *filter* counts evaluations — a projected
+    # UDF would be duplicated by filter push-down and count twice anyway.
+    n = 22
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(a):
+        calls.add(1)
+        return True
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "a long, b long").where(keep("a"))
+    got = _cc_map(connected_components(edges, max_iter=20))
+    assert set(got.values()) == {0} and len(got) == n + 1
+    assert calls.value == n
