@@ -21,8 +21,12 @@ size, only in bucket size.  AQE's skew-join split handles hot buckets.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from seq2kg_spark.operators.ann import int_dot, quantized
 
 
 def with_text_md5(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -218,6 +222,29 @@ MAX_SHINGLES_DEFAULT = 2048
 MAX_BUCKET_DEFAULT = 10_000
 
 
+def band_signatures(
+    df: DataFrame,
+    member: Column,
+    shingles: Column,
+    n_bands: int,
+    band_rows: int,
+    hash_fn: str,
+) -> DataFrame:
+    """(m, band, sig): one row per ``member`` of ``df`` and LSH band — the
+    signature projection shared by :func:`lsh_bucket_pairs` and
+    :func:`minhash_cluster_edges`.
+
+    All n_bands signatures (:func:`band_signature`) are computed in ONE
+    projection, an array over the band sequence, posexploded after; the
+    band number is the array position.
+    """
+    sigs = F.transform(
+        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        lambda b: band_signature(shingles, b, band_rows, hash_fn))
+    return df.select(member.alias("m"),
+                     F.posexplode(sigs).alias("band", "sig"))
+
+
 def lsh_bucket_pairs(
     df: DataFrame,
     member: Column,
@@ -236,20 +263,16 @@ def lsh_bucket_pairs(
     :func:`band_signature`); ``member`` any orderable column, a struct
     when the caller needs more than the id on both sides of a pair.
 
-    All n_bands signatures are computed in ONE projection (an array over
-    the band sequence, posexploded after), then a single groupBy(band,
-    sig) → collect_list → in-bucket pair expansion.  The former shape
-    (groupBy count for the bucket cap + join back + self-join on (band,
-    sig)) evaluated the whole shingle→signature pipeline THREE times (x
-    side, y side, cap) and paid three exchanges; this shape evaluates it
-    once and pays one exchange before dropDuplicates — measured 35s → 20s
-    for dedup at sf1.0, with bit-identical pairs on both hash paths.
+    The signatures come from :func:`band_signatures`, then a single
+    groupBy(band, sig) → collect_list → in-bucket pair expansion.  The
+    former shape (groupBy count for the bucket cap + join back + self-join
+    on (band, sig)) evaluated the whole shingle→signature pipeline THREE
+    times (x side, y side, cap) and paid three exchanges; this shape
+    evaluates it once and pays one exchange before dropDuplicates —
+    measured 35s → 20s for dedup at sf1.0, with bit-identical pairs on
+    both hash paths.
     """
-    sigs = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: band_signature(shingles, b, band_rows, hash_fn))
-    sig = df.select(member.alias("m"),
-                    F.posexplode(sigs).alias("band", "sig"))
+    sig = band_signatures(df, member, shingles, n_bands, band_rows, hash_fn)
     # Hot-bucket guard (drop-before-pairing): members of an over-cap bucket
     # contribute no candidates from that band — true near-dups usually
     # collide in a calmer band too.  Bounds pair expansion at
@@ -386,6 +409,48 @@ def minhash_lsh_pairs(
     )
 
 
+def _words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, word): one row per non-empty space-separated token."""
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(
+            F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
+        ).alias("word"),
+    )
+
+
+def _majority_bits(words: DataFrame, bit_sql: Callable[[int], str],
+                   n_bits: int) -> tuple[DataFrame, list[str]]:
+    """SimHash majority vote: ONE wide aggregation per doc over the
+    per-word bit expressions ``bit_sql(j)`` (0/1 longs), returned with the
+    SQL predicates "bit j is set" for j in range(n_bits).
+
+    One wide aggregation instead of an n_bits× bit explode + two groupBys
+    (50k docs x ~54 words x 64 = 173M pre-shuffle rows at sf1.0).  Bit j
+    is set iff 2*cnt_j > n_words, identical to the sum-of-±1 > 0
+    formulation.  The counters are PACKED two per long (32-bit limbs: bit
+    j in the low half, bit j + n_bits/2 in the high half), so the
+    aggregate carries n_bits/2 + 1 buffers — at 64 bits the 65-buffer
+    form fell out of whole-stage codegen and its interpreted update loop
+    was the whole cost at small inputs (0.85s → 0.30s at sf0.1, 0.87s →
+    0.66s at 50k docs, identical output).  A 32-bit limb cannot overflow
+    into its neighbour below 2^31 words per doc.
+
+    Expressions are built as SQL strings (one JVM parse each) instead of
+    nested Column calls: the Column form was ~1,500 py4j round-trips and
+    1.5s of driver time PER INVOCATION at 64 bits — more than the sf0.1
+    execution itself.
+    """
+    half = n_bits // 2
+    agg = words.groupBy("doc_id").agg(F.count("*").alias("n"), *[
+        F.expr(f"sum(({bit_sql(j)}) | shiftleft({bit_sql(j + half)}, 32))"
+               ).alias(f"p{j}") for j in range(half)])
+    mask = (1 << 32) - 1
+    majority = ([f"(p{j} & {mask}L) * 2 > n" for j in range(half)]
+                + [f"shiftright(p{j}, 32) * 2 > n" for j in range(half)])
+    return agg, majority
+
+
 def simhash16(df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
     """16-bit SimHash from md5-nibble parities (cross-engine exact).
@@ -393,50 +458,20 @@ def simhash16(df: DataFrame, id_col: str = "doc_id",
     bit_j(word) = parity of hex nibble j of md5(word); doc bit j = majority
     over words.  Output: (doc_id, simhash string of '0'/'1' x 16).
     """
-    # One wide aggregation (16 conditional sums) instead of a 16x bit
-    # explode + two groupBys: bit j is set iff the majority of words have
-    # an odd nibble j, i.e. 2*cnt_j > n_words — identical to the former
-    # sum-of-±1 > 0 formulation, with a 16x smaller pre-shuffle row count.
-    w = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-        ).alias("word"),
-    ).withColumn("h", F.md5("word"))
-    agg = w.groupBy("doc_id").agg(
-        F.count("*").alias("n"),
-        *[
-            F.sum(
-                F.when(
-                    F.instr(F.lit("13579bdf"), F.substring("h", j + 1, 1)) > 0,
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            ).alias(f"c{j}")
-            for j in range(16)
-        ],
-    )
-    bit = [
-        F.when(F.col(f"c{j}") * 2 > F.col("n"), F.lit("1")).otherwise(F.lit("0"))
-        for j in range(16)
-    ]
-    return agg.select("doc_id", F.concat(*bit).alias("simhash"))
+    w = _words(df, id_col, text_col).withColumn("h", F.md5("word"))
+    agg, majority = _majority_bits(
+        w, lambda j: (f"CASE WHEN instr('13579bdf', substring(h, {j + 1}, 1))"
+                      f" > 0 THEN 1L ELSE 0L END"), 16)
+    bits = ", ".join(f"CASE WHEN {m} THEN '1' ELSE '0' END" for m in majority)
+    return agg.select("doc_id", F.expr(f"concat({bits})").alias("simhash"))
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
     """64-bit SimHash via xxhash64 — the scale variant (JVM-side ints,
     SQL-expr bit arithmetic because shift-by-column needs expr())."""
-    # One wide aggregation instead of the former 64x bit explode (50k docs
-    # x ~54 words x 64 = 173M pre-shuffle rows at sf1.0) + two groupBys.
-    # The 64 bit-counters are PACKED two per long (32-bit limbs: bit j in
-    # the low half, bit j+32 in the high half), so the aggregate carries 33
-    # buffers instead of 65 — the 65-buffer form fell out of whole-stage
-    # codegen and its interpreted update loop was the whole cost at small
-    # inputs (0.85s → 0.30s at sf0.1, 0.87s → 0.66s at 50k docs, identical
-    # output).  A 32-bit limb cannot overflow into its neighbour below 2^31
-    # words per doc.  Bit j is set iff 2*cnt_j > n_words, identical to
-    # sum-of-±1 > 0; (h >> j) & 1 equals the old (h >> j) % 2 != 0 test for
-    # negative hashes too (-1 & 1 == 1).
+    # (h >> j) & 1 equals the old (h >> j) % 2 != 0 test for negative
+    # hashes too (-1 & 1 == 1).
     #
     # Small inputs arrive as one scan split (a single small parquet file),
     # which serializes the whole explode+aggregate on one core; repartition
@@ -447,39 +482,12 @@ def simhash64(df: DataFrame, id_col: str = "doc_id",
     base = df
     if df.rdd.getNumPartitions() < par:
         base = df.repartition(2 * par, id_col)
-    w = base.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-        ).alias("word"),
-    ).withColumn("h", F.xxhash64("word"))
-    # Expressions are built as SQL strings (one JVM parse each) instead of
-    # nested Column calls: the Column form was ~1,500 py4j round-trips and
-    # 1.5s of driver time PER INVOCATION — more than the sf0.1 execution
-    # itself.  expr parsing is ~35 calls total.
-    agg = w.groupBy("doc_id").agg(
-        F.count("*").alias("n"),
-        *[
-            F.expr(
-                f"sum((shiftright(h, {j}) & 1) | "
-                f"shiftleft(shiftright(h, {j + 32}) & 1, 32))"
-            ).alias(f"p{j}")
-            for j in range(32)
-        ],
-    )
-    mask = (1 << 32) - 1
-    terms = []
-    for j in range(32):
-        terms.append(
-            f"(CASE WHEN (p{j} & {mask}L) * 2 > n "
-            f"THEN shiftleft(1L, {j}) ELSE 0L END)"
-        )
-        terms.append(
-            f"(CASE WHEN shiftright(p{j}, 32) * 2 > n "
-            f"THEN shiftleft(1L, {j + 32}) ELSE 0L END)"
-        )
-    total = F.expr(" + ".join(terms))
-    return agg.select("doc_id", total.alias("simhash64"))
+    w = _words(base, id_col, text_col).withColumn("h", F.xxhash64("word"))
+    agg, majority = _majority_bits(
+        w, lambda j: f"(shiftright(h, {j}) & 1)", 64)
+    total = " | ".join(f"CASE WHEN {m} THEN shiftleft(1L, {j}) ELSE 0L END"
+                       for j, m in enumerate(majority))
+    return agg.select("doc_id", F.expr(total).alias("simhash64"))
 
 
 def embedding_near_dup_pairs(
@@ -497,30 +505,16 @@ def embedding_near_dup_pairs(
     two 64-dim x |x|≤~5000 vectors ≤ 1.6e9 — exact in int64 and in DuckDB's
     double accumulation, so oracle comparison is bit-stable.
     """
-    q = emb.select(
-        F.col(id_col).alias("vid"),
-        *([F.col(block_col).alias("block")] if block_col else []),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * quant, 0).cast("long"),
-        ).alias("qv"),
-    )
-    a = q.select(F.col("vid").alias("id_a"), F.col("qv").alias("qa"),
-                 *(["block"] if block_col else []))
-    b = q.select(F.col("vid").alias("id_b"), F.col("qv").alias("qb"),
-                 *(["block"] if block_col else []))
-    pairs = a.join(b, ["block"] if block_col else None, "inner") if block_col \
-        else a.crossJoin(b)
+    blk = ["block"] if block_col else []
+    q = emb.select(F.col(id_col).alias("vid"),
+                   *[F.col(block_col).alias(c) for c in blk],
+                   quantized(F.col(vec_col), quant).alias("qv"))
+    a = q.select(F.col("vid").alias("id_a"), F.col("qv").alias("qa"), *blk)
+    b = q.select(F.col("vid").alias("id_b"), F.col("qv").alias("qb"), *blk)
+    pairs = a.join(b, "block") if block_col else a.crossJoin(b)
     return (
         pairs.where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "dot",
-            F.aggregate(
-                F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        )
+        .withColumn("dot", int_dot("qa", "qb"))
         .where(F.col("dot") >= min_dot)
         .select("id_a", "id_b", "dot")
     )
@@ -534,7 +528,6 @@ def minhash_cluster_edges(
     k: int = 3,
     hash_fn: str = "xxhash64",
     band_rows: int = 4,
-    verify_threshold: float | None = None,
 ) -> DataFrame:
     """LINEAR-cost near-dup edges for the retention path: per (band, sig)
     bucket emit member→min-member STAR edges (w−1 rows per bucket) instead
@@ -557,48 +550,18 @@ def minhash_cluster_edges(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh"),
     )
-    banded = base.select(
-        "doc_id", "sh",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    )
-    # band_signature is shared with minhash_lsh_pairs, so the two
+    # band_signatures is shared with minhash_lsh_pairs, so the two
     # operators bucket identically at equal r — CC over star edges then
-    # equals CC over the all-pairs candidate graph (pytest-pinned).
-    sig = banded.select(
-        "doc_id", "band",
-        band_signature(F.col("sh"), F.col("band"), band_rows,
-                       hash_fn).alias("sig"))
-    rep = sig.groupBy("band", "sig").agg(F.min("doc_id").alias("rep"))
-    edges = (
-        sig.join(rep, ["band", "sig"])
-        .where(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("a"), F.col("doc_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    if verify_threshold is None:
-        return edges
-    # LINEAR verification: one array_intersect per star edge (|edges|
-    # rows, not |bucket|² — each member is only ever compared to its
-    # bucket rep).  Without it CC over raw buckets transitively
-    # over-merges on LSH-hot corpora: measured on 500k synthetic
-    # shared-vocab pages, unverified r=4 stars chained 490k docs into one
-    # component; verified stars keep only true near-dup links.
-    sets = base.select(
-        "doc_id",
-        F.slice(F.array_sort(F.col("sh")), 1,
-                MAX_SHINGLES_DEFAULT).alias("ss"),
-        F.size("sh").alias("n"),
-    )
-    a_s = sets.select(F.col("doc_id").alias("a"),
-                      F.col("ss").alias("sh_a"), F.col("n").alias("n_a"))
-    b_s = sets.select(F.col("doc_id").alias("b"),
-                      F.col("ss").alias("sh_b"), F.col("n").alias("n_b"))
+    # equals CC over the all-pairs candidate graph (pytest-pinned).  The
+    # bucket min is a window over the (band, sig) exchange, not a groupBy
+    # joined back, so the signature pipeline runs once and the plan pays
+    # two exchanges: the window's and dropDuplicates'.
+    sig = band_signatures(base, F.col("doc_id"), F.col("sh"), n_bands,
+                          band_rows, hash_fn)
+    rep = F.min("m").over(Window.partitionBy("band", "sig"))
     return (
-        edges.join(a_s, "a").join(b_s, "b")
-        .withColumn("_i", F.size(F.array_intersect("sh_a", "sh_b")))
-        .where(
-            F.col("_i") / (F.col("n_a") + F.col("n_b") - F.col("_i"))
-            >= verify_threshold
-        )
-        .select("a", "b")
+        sig.withColumn("rep", rep)
+        .where(F.col("m") != F.col("rep"))
+        .select(F.col("rep").alias("a"), F.col("m").alias("b"))
+        .dropDuplicates(["a", "b"])
     )

@@ -32,7 +32,7 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -75,19 +75,7 @@ def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:
         it = fs.listFiles(hpath, True)  # recursive
         while it.hasNext():
             if it.next().getPath().getName().endswith(".parquet"):
-                # mergeSchema: a lineage dir written by an older build may
-                # carry the pre-rename ``wall_ms`` column — without merging,
-                # whichever footer wins would null out the other's metric.
-                lin = (spark.read.option("mergeSchema", "true")
-                       .parquet(lineage_path))
-                if "wall_ms" in lin.columns:
-                    migrated = (
-                        F.coalesce(F.col("job_wall_ms"), F.col("wall_ms"))
-                        if "job_wall_ms" in lin.columns else F.col("wall_ms")
-                    )
-                    lin = (lin.withColumn("job_wall_ms", migrated)
-                           .drop("wall_ms"))
-                return lin
+                return spark.read.parquet(lineage_path)
     return spark.createDataFrame([], LINEAGE_SCHEMA)
 
 
@@ -148,6 +136,18 @@ def run_stage_checkpointed(
     else:
         waves = [pending]
 
+    # Input metrics: ONE aggregate over every pending bucket, before the
+    # first wave — the input does not change between waves, so neither
+    # do its per-bucket figures.
+    in_stats = {
+        r.bucket: (r.lo, r.hi, r.n)
+        for r in bucketed.where(F.col("bucket").isin(pending))
+        .groupBy("bucket").agg(
+            F.count("*").alias("n"),
+            F.min(key_col).alias("lo"),
+            F.max(key_col).alias("hi"),
+        ).collect()
+    }
     fs, _ = _hadoop_fs(spark, out_path)
     jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     for wave in waves:
@@ -166,40 +166,26 @@ def run_stage_checkpointed(
             bdir = jvm_path(f"{out_path}/bucket={b}")
             if fs.exists(bdir):
                 fs.delete(bdir, True)
+        # n_output is observed on the write job itself instead of
+        # re-reading the committed output, which raised on a zero-row
+        # first commit (no parquet file to infer a schema from).  Only the
+        # WRITE is observed: an observation inside stage_fn's plan never
+        # reports when the stage ignores its slice or Catalyst prunes it.
+        obs = Observation()
         (
-            result.write.mode("overwrite")
+            result.observe(obs, *[
+                F.count_if(F.col("bucket") == b).alias(f"n{b}")
+                for b in wave])
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(out_path)
         )
         job_wall_ms = int((time.monotonic() - t0) * 1000)
-
-        # per-bucket metrics from the committed output (cheap scan of the
-        # wave's new dirs)
-        out = spark.read.parquet(out_path).where(F.col("bucket").isin(wave))
-        in_counts = {
-            r.bucket: (r.n, r.lo, r.hi)
-            for r in todo.groupBy("bucket").agg(
-                F.count("*").alias("n"),
-                F.min(key_col).alias("lo"),
-                F.max(key_col).alias("hi"),
-            ).collect()
-        }
-        out_counts = {
-            r.bucket: r.n
-            for r in out.groupBy("bucket").agg(
-                F.count("*").alias("n")).collect()
-        }
+        n_out = obs.get
         rows = [
-            (
-                stage, int(b),
-                in_counts.get(b, (0, None, None))[1],
-                in_counts.get(b, (0, None, None))[2],
-                int(in_counts.get(b, (0, None, None))[0]),
-                int(out_counts.get(b, 0)),
-                job_wall_ms,
-                run_id,
-            )
+            (stage, b, *in_stats.get(b, (None, None, 0)), n_out[f"n{b}"],
+             job_wall_ms, run_id)
             for b in wave
         ]
         lineage_rows = spark.createDataFrame(

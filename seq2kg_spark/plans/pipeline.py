@@ -29,7 +29,9 @@ from seq2kg_spark.operators.canonicalize import (SIM_BAND_ROWS_DEFAULT,
                                                  SIM_THRESHOLD_DEFAULT,
                                                  canonicalize, release_caches)
 from seq2kg_spark.operators.extract import extract_triples
-from seq2kg_spark.operators.lineage import run_stage_checkpointed
+from seq2kg_spark.operators.lineage import (_hadoop_fs,
+                                            run_stage_checkpointed,
+                                            with_bucket)
 
 
 def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
@@ -72,7 +74,6 @@ def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
     from seq2kg_spark.functions import text_stats as TS
     from seq2kg_spark.functions.html_text import (decode_html_expr,
                                                   html_to_text_expr)
-    from seq2kg_spark.operators.lineage import with_bucket
 
     def decode_once(df: DataFrame) -> DataFrame:
         # Pages that arrive with raw HTML only (text IS NULL) get stage-0
@@ -181,11 +182,9 @@ def run_kg_pipeline(
             t = neural_extract_triples(cols, num_partitions=num_partitions)
         else:
             t = extract_triples(cols, num_partitions=num_partitions)
-        # re-derive the bucket from url: deterministic, survives the UDF
-        return t.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"),
-        )
+        # re-derive the bucket from url (the triples carry no bucket
+        # column): deterministic, survives the UDF
+        return with_bucket(t, "url", n_buckets)
 
     report_extract = run_stage_checkpointed(
         pages,
@@ -248,12 +247,11 @@ def run_kg_pipeline(
     marker_path = os.path.join(workdir, "canonical_done")
     canon_stats: dict = {}
     prior = None
-    try:
+    fs, hpath = _hadoop_fs(spark, marker_path)
+    if fs.exists(hpath):
         rows = spark.read.parquet(marker_path).collect()
         if rows:
             prior = rows[0].fp
-    except Exception:
-        prior = None
     # Skip only when (a) THIS run re-extracted nothing (a recomputed bucket
     # may change content without changing its row count) and (b) the
     # committed lineage matches what the marker was built from.

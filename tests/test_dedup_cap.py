@@ -145,6 +145,8 @@ def test_cluster_edges_components_equal_pairs_components(spark):
     components over minhash_cluster_edges equal components over the
     all-pairs candidate graph at the same r — the retention-policy
     equivalence that makes the linear form safe at scale."""
+    import re
+
     from seq2kg_spark.operators.canonicalize import connected_components
     from seq2kg_spark.operators.dedup import (minhash_cluster_edges,
                                               minhash_lsh_pairs)
@@ -160,6 +162,13 @@ def test_cluster_edges_components_equal_pairs_components(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     stars = minhash_cluster_edges(df, band_rows=1, hash_fn="md5")
+    # the bucket min is a window over the (band, sig) exchange, not a
+    # groupBy joined back: ONE Generate (the band posexplode), two
+    # exchanges (window + dropDuplicates), no join
+    plan = stars._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bGenerate\b", plan)) == 1, plan
+    assert len(re.findall(r"\bExchange hashpartitioning", plan)) == 2, plan
+    assert "Join" not in plan, plan
     pairs = minhash_lsh_pairs(df, threshold=0.0, band_rows=1,
                               hash_fn="md5").select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))

@@ -2,6 +2,7 @@
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from seq2kg_spark.operators.lineage import (
@@ -133,3 +134,60 @@ def test_wave_commit_survives_mid_stage_crash(spark, pages, tmp_path):
     got = {tuple(r) for r in spark.read.parquet(out).collect()}
     ref = {tuple(r) for r in spark.read.parquet(out_ref).collect()}
     assert got == ref
+
+
+def _keep_even_text(df):
+    # drops roughly half the rows, so n_output differs from n_input
+    return df.where(F.length("text") % 2 == 0)
+
+
+@pytest.mark.parametrize("wave_size", [None, 3])
+def test_lineage_rows_match_independent_counts(spark, pages, tmp_path,
+                                               wave_size):
+    """Every lineage row's n_input / url_min / url_max equal a groupBy of
+    the input by bucket, and n_output a groupBy of the committed output."""
+    inp = pages.select("url", "text")
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    run_stage_checkpointed(
+        inp, _keep_even_text, stage="tag", out_path=out, lineage_path=lin,
+        n_buckets=8, wave_size=wave_size)
+
+    bucket = F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("b")
+    want_in = {
+        r.b: (r.n, r.lo, r.hi)
+        for r in inp.groupBy(bucket).agg(
+            F.count("*").alias("n"), F.min("url").alias("lo"),
+            F.max("url").alias("hi")).collect()
+    }
+    want_out = {
+        r.bucket: r.n
+        for r in spark.read.parquet(out).groupBy("bucket").agg(
+            F.count("*").alias("n")).collect()
+    }
+    got = {r.bucket: r for r in read_lineage(spark, lin).collect()}
+    assert set(got) == set(range(8))
+    for b, r in got.items():
+        assert (r.n_input, r.url_min, r.url_max) == \
+            want_in.get(b, (0, None, None)), b
+        assert r.n_output == want_out.get(b, 0), b
+    assert 0 < sum(want_out.values()) < inp.count()
+
+
+@pytest.mark.parametrize("stage_fn", [
+    lambda d: d.where(F.col("url") == "nope"),
+    lambda d: d.where(F.lit(False)),
+    lambda d: d.limit(0),
+], ids=["no-match", "lit-false", "limit-0"])
+def test_zero_row_first_commit(spark, pages, tmp_path, stage_fn):
+    """A stage whose first commit writes no rows still commits one lineage
+    row per bucket (n_output 0) instead of failing to re-read an output
+    directory that holds no parquet file."""
+    inp = pages.select("url", "text")
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    r = run_stage_checkpointed(
+        inp, stage_fn, stage="empty", out_path=out, lineage_path=lin,
+        n_buckets=4)
+    assert r["processed"] == [0, 1, 2, 3]
+    rows = read_lineage(spark, lin).collect()
+    assert {x.bucket: x.n_output for x in rows} == {b: 0 for b in range(4)}
+    assert sum(x.n_input for x in rows) == inp.count()

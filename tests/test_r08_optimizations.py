@@ -4,7 +4,8 @@ Each test pins a restructured operator internal against its spec form:
 * flat codegen dot products == HOF aggregate forms (int exact, float
   bit-exact via order-preserving left-deep sums), including the
   mismatched-length fallback and the wide-dim cap;
-* wide-aggregation simhash64 == per-bit ±1-majority reference;
+* wide-aggregation simhash16 / simhash64 == per-bit ±1-majority
+  reference;
 * batched segmented pooling == per-sentence/per-token pooling loop.
 """
 
@@ -108,7 +109,9 @@ def test_float_cosine_flat_bit_exact(spark):
 
 
 def test_simhash64_matches_reference(spark):
-    from seq2kg_spark.operators.dedup import simhash64
+    import hashlib
+
+    from seq2kg_spark.operators.dedup import simhash16, simhash64
 
     texts = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -119,25 +122,34 @@ def test_simhash64_matches_reference(spark):
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
     got = {r["doc_id"]: r["simhash64"] for r in simhash64(df).collect()}
+    got16 = {r["doc_id"]: r["simhash"] for r in simhash16(df).collect()}
 
     # per-bit ±1-majority reference using Spark's own xxhash64 values
+    # (64-bit) and hashlib's md5 hex nibble parities (16-bit)
     words_df = df.select(
         "doc_id",
         F.explode(F.filter(F.split("text", " "),
                            lambda x: x != F.lit(""))).alias("w"),
-    ).select("doc_id", F.xxhash64("w").alias("h"))
-    hashes: dict[int, list[int]] = {}
+    ).select("doc_id", "w", F.xxhash64("w").alias("h"))
+    words: dict[int, list[tuple[str, int]]] = {}
     for r in words_df.collect():
-        hashes.setdefault(r["doc_id"], []).append(r["h"])
-    for doc, hs in hashes.items():
+        words.setdefault(r["doc_id"], []).append((r["w"], r["h"]))
+    assert set(got) == set(got16) == set(words)
+    for doc, ws in words.items():
         val = 0
         for j in range(64):
-            s = sum(1 if (h >> j) & 1 else -1 for h in hs)
+            s = sum(1 if (h >> j) & 1 else -1 for _, h in ws)
             if s > 0:
                 val |= 1 << j
         # reinterpret as signed int64 (matches shiftleft(1L, 63) overflow)
         val = np.int64(np.uint64(val))
         assert got[doc] == val, f"doc {doc}: {got[doc]} != {val}"
+        hexes = [hashlib.md5(w.encode()).hexdigest() for w, _ in ws]
+        want16 = "".join(
+            "1" if sum(1 if int(x[j], 16) & 1 else -1 for x in hexes) > 0
+            else "0"
+            for j in range(16))
+        assert got16[doc] == want16, f"doc {doc}: {got16[doc]} != {want16}"
 
 
 def test_pool_wordpieces_flat_matches_loop():
