@@ -54,7 +54,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ASCII whitespace, spelled out (see module doc).
@@ -147,6 +147,20 @@ def html_to_text_expr(col: Column) -> Column:
     for pat, rep in HTML_WS_STEPS:
         c = F.regexp_replace(c, pat, rep)
     return c
+
+
+def with_page_text(df: DataFrame) -> DataFrame:
+    """Stage-0 text: pages that arrive with raw HTML only (``text`` IS
+    NULL) get it extracted inline from ``html`` — a pure Catalyst
+    projection, so batch and streaming plans share it.  A frame without
+    an ``html`` column is returned as is."""
+    if "html" not in df.columns:
+        return df
+    return df.withColumn(
+        "text",
+        F.coalesce(F.col("text"),
+                   html_to_text_expr(decode_html_expr(F.col("html")))),
+    )
 
 
 def _sql_str(s: str) -> str:

@@ -164,7 +164,6 @@ def similarity_edges(
     mentions: DataFrame,
     threshold: float = SIM_THRESHOLD_DEFAULT,
     n_bands: int = SIM_N_BANDS_DEFAULT,
-    k: int = 3,
     max_bucket: int = SIM_MAX_BUCKET_DEFAULT,
     hash_fn: str = "xxhash64",
     new_flag_col: str | None = None,
@@ -174,7 +173,7 @@ def similarity_edges(
     """Same-entity candidate edges between *normalized* mention strings.
 
     Exact-norm collisions are free (groupBy); near-miss pairs come from
-    banded MinHash over char k-shingles, verified by Jaccard ≥ threshold.
+    banded MinHash over char 3-shingles, verified by Jaccard ≥ threshold.
     Returns (a, b) string pairs with a < b.
 
     The internal ``persist()`` of the norm shingle sets (read by the
@@ -226,7 +225,7 @@ def similarity_edges(
     flag = ["_new"] if new_flag_col else []
     norm_sets = norms.select(
         "norm", *flag,
-        F.array_sort(_char_shingles(F.col("norm"), k)).alias("shingles"),
+        F.array_sort(_char_shingles(F.col("norm"))).alias("shingles"),
     ).persist()
     # Banded min-signatures without exploding shingles: per (norm, band),
     # sig = min over the row's shingle array of hash(band, j, shingle) — a
@@ -400,21 +399,38 @@ def connected_components(
     return out
 
 
+def _assign(norms: DataFrame, sim: DataFrame, extra: DataFrame | None,
+            stats: dict | None) -> DataFrame:
+    """(norm) → (norm, component): CC over ``sim`` (∪ ``extra`` edges);
+    every norm gets a component, singletons map to themselves.
+
+    CC checkpoints its input before the first round, so the similarity
+    persist is released here; the final CC snapshot backs the result
+    lazily and rides on its ``_canon_caches``."""
+    comp = connected_components(
+        sim if extra is None else sim.unionByName(extra), stats=stats)
+    release_caches(sim)
+    out = (
+        norms.join(comp, F.col("norm") == F.col("node"), "left")
+        .select(
+            "norm", F.coalesce("component", F.col("norm")).alias("component")
+        )
+    )
+    out._canon_caches = comp._canon_caches
+    return out
+
+
 def canonicalize(
     triples: DataFrame,
     threshold: float = SIM_THRESHOLD_DEFAULT,
-    n_bands: int = SIM_N_BANDS_DEFAULT,
     stats: dict | None = None,
-    max_bucket: int = SIM_MAX_BUCKET_DEFAULT,
-    band_rows: int = SIM_BAND_ROWS_DEFAULT,
 ) -> tuple[DataFrame, DataFrame]:
     """triples → (nodes, edges) canonical graph tables.
 
     ``stats`` (optional dict) is filled with convergence telemetry:
     ``cc_rounds`` / ``cc_edges`` from the large/small-star loop and
     ``distinct_mentions`` — the scale drivers a cluster operator watches.
-    ``max_bucket`` is the LSH hot-bucket cap, ``n_bands``/``band_rows``
-    the banded-MinHash shape (similarity_edges).
+    The LSH shape is the ``SIM_*`` default (similarity_edges).
 
     Cache lifetime: the similarity-edge persist is released as soon as
     CC returns (its input checkpoint is the last consumer); the mentions
@@ -425,23 +441,11 @@ def canonicalize(
     output after writing both.
     """
     mentions = mentions_from_triples(triples).cache()
-    sim = similarity_edges(mentions, threshold=threshold, n_bands=n_bands,
-                           max_bucket=max_bucket, band_rows=band_rows)
-    comp = connected_components(sim, stats=stats)
-    # CC checkpointed the edge set before its first round, so the
-    # similarity persist has no remaining consumer
-    release_caches(sim)
+    norms = mentions.select("norm").distinct()
+    norm_comp = _assign(
+        norms, similarity_edges(mentions, threshold=threshold), None, stats)
     if stats is not None:
-        stats["distinct_mentions"] = (
-            mentions.select("norm").distinct().count())
-    # every norm gets a component; singletons map to themselves
-    norm_comp = (
-        mentions.select("norm").distinct()
-        .join(comp, F.col("norm") == F.col("node"), "left")
-        .select(
-            "norm", F.coalesce("component", F.col("norm")).alias("component")
-        )
-    )
+        stats["distinct_mentions"] = norms.count()
     # One row per mention surface.  localCheckpoint (same lineage-cut budget
     # as the CC rounds) because FIVE downstream subtrees reference it — the
     # canon window, nodes, and both edge-side maps; without the cut each
@@ -452,7 +456,7 @@ def canonicalize(
     # m is materialized and lineage-cut: the mentions cache and the final
     # CC snapshot have no remaining consumers
     mentions.unpersist()
-    release_caches(comp)
+    release_caches(norm_comp)
     # canonical surface: most frequent, then longest, then lexicographic
     w = Window.partitionBy("component").orderBy(
         F.desc("freq"), F.desc(F.length("mention")), F.asc("mention")
@@ -509,12 +513,7 @@ def canonicalize(
 def incremental_assign(
     old_assign: DataFrame,
     new_mentions: DataFrame,
-    threshold: float = SIM_THRESHOLD_DEFAULT,
-    n_bands: int = SIM_N_BANDS_DEFAULT,
-    max_bucket: int = SIM_MAX_BUCKET_DEFAULT,
-    hash_fn: str = "xxhash64",
     stats: dict | None = None,
-    band_rows: int = SIM_BAND_ROWS_DEFAULT,
 ) -> DataFrame:
     """Incremental component assignment for an append-only mention stream.
 
@@ -534,7 +533,7 @@ def incremental_assign(
 
     Semantics note: equality with a from-scratch recompute is exact as
     long as the hot-bucket cap decisions don't change between runs (a
-    bucket crossing ``max_bucket`` only because of newly added norms
+    bucket crossing ``SIM_MAX_BUCKET_DEFAULT`` only because of new norms
     drops pairs a full recompute would also drop, but cannot retract an
     old merge).  In general the result is the union-closure of per-batch
     decisions — the desirable monotone semantics for an append-only
@@ -558,26 +557,10 @@ def incremental_assign(
     all_norms = old_norms.unionByName(new_only)
     if stats is not None:
         stats["n_new_norms"] = new_only.count()
-    sim = similarity_edges(
-        all_norms, threshold=threshold, n_bands=n_bands,
-        max_bucket=max_bucket, hash_fn=hash_fn, new_flag_col="is_new",
-        band_rows=band_rows,
-    )
     stars = (
         old_assign.where(F.col("norm") != F.col("component"))
         .select(F.col("component").alias("a"), F.col("norm").alias("b"))
     )
-    comp = connected_components(sim.unionByName(stars), stats=stats)
-    # CC's input checkpoint cut the lineage from sim — the similarity
-    # persist has no remaining consumer
-    release_caches(sim)
-    out = (
-        all_norms.select("norm")
-        .join(comp, F.col("norm") == F.col("node"), "left")
-        .select(
-            "norm",
-            F.coalesce("component", F.col("norm")).alias("component"),
-        )
-    )
-    out._canon_caches = getattr(comp, "_canon_caches", [])
-    return out
+    return _assign(
+        all_norms.select("norm"),
+        similarity_edges(all_norms, new_flag_col="is_new"), stars, stats)

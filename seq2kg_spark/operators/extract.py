@@ -4,10 +4,14 @@ Spark plan (one narrow UDF stage, one shuffle for skew balance):
 
     scan pages (column-pruned: url, text, lang)
       → filter lang == 'en'                (pushed to the scan)
-      → project clean_text (T1 Catalyst chain, whole-stage codegen)
       → salted size-bucketed repartition   (the only shuffle)
+      → project clean_text (T1 Catalyst chain, whole-stage codegen)
       → mapInPandas(extract batch)         (Arrow-batched, pure Python NLP)
       → triples(url, subj, pred, obj)
+
+Everything up to the clean_text projection is :func:`clean_pages`, the
+front end the neural extractor (:mod:`seq2kg_spark.operators.tagger_infer`)
+shares.
 
 Reference lifecycle being re-expressed: candidate_extraction/
 triples_from_test_data.py:16-38 + triples_from_text.py (see SURVEY.md §3.1).
@@ -52,14 +56,9 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def extract_triples(
-    pages: DataFrame,
-    *,
-    lang: str = "en",
-    num_partitions: int | None = None,
-    salt_buckets: int = 64,
-) -> DataFrame:
-    """pages → (url, subj, pred, obj) triples.
+def clean_pages(pages: DataFrame, num_partitions: int | None,
+                salt_buckets: int) -> DataFrame:
+    """English pages → (url, clean_text), size-balanced across tasks.
 
     Stage layout matters: the scan stage's parallelism is bounded by input
     file count, so only the (pushable) lang filter and a 2-column projection
@@ -69,15 +68,19 @@ def extract_triples(
     parallelism.  Raw ``length(text)`` is the size proxy (clean only
     shrinks whitespace, monotonicity holds).
     """
-    scanned = pages.where(F.col("lang") == lang).select("url", "text")
+    scanned = pages.where(F.col("lang") == "en").select("url", "text")
     balanced = salted_size_repartition(
-        scanned,
-        F.length("text"),
-        "url",
-        num_partitions=num_partitions,
+        scanned, F.length("text"), num_partitions=num_partitions,
         salt_buckets=salt_buckets,
     )
-    cleaned = balanced.select(
+    return balanced.select(
         "url", clean_text_expr(F.col("text")).alias("clean_text")
     )
-    return cleaned.mapInPandas(_extract_batches, schema=TRIPLES_SCHEMA)
+
+
+def extract_triples(
+    pages: DataFrame, *, num_partitions: int | None = None
+) -> DataFrame:
+    """pages → (url, subj, pred, obj) triples."""
+    return clean_pages(pages, num_partitions, 64).mapInPandas(
+        _extract_batches, schema=TRIPLES_SCHEMA)

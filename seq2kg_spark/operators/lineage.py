@@ -51,11 +51,11 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def with_bucket(df: DataFrame, key_col: str = "url", n_buckets: int = 16) -> DataFrame:
-    """Attach the stage's bucket id: ``pmod(xxhash64(key), n_buckets)``.
+def with_bucket(df: DataFrame, n_buckets: int = 16) -> DataFrame:
+    """Attach the stage's bucket id: ``pmod(xxhash64(url), n_buckets)``.
 
     If the input already carries a ``bucket`` column it is TRUSTED as that
-    same function of the key (true for any table a previous stage committed
+    same function of the url (true for any table a previous stage committed
     via ``run_stage_checkpointed`` — it partitions output by this very
     derivation).  Keeping the stored column matters for the wave path: a
     filter on a parquet PARTITION column prunes the scan to the wave's
@@ -65,7 +65,7 @@ def with_bucket(df: DataFrame, key_col: str = "url", n_buckets: int = 16) -> Dat
     if "bucket" in df.columns:
         return df
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
     )
 
 
@@ -94,16 +94,14 @@ def run_stage_checkpointed(
     stage: str,
     out_path: str,
     lineage_path: str,
-    key_col: str = "url",
     n_buckets: int = 16,
-    run_id: str | None = None,
     wave_size: int | None = None,
 ) -> dict:
     """Run ``stage_fn`` over all not-yet-committed buckets; commit + log.
 
     Returns {"processed": [...], "skipped": [...], "run_id": ...,
     "waves": N}.  The stage_fn receives the bucketed input slice and must
-    preserve the ``bucket`` and ``key_col`` columns.
+    preserve the ``bucket`` and ``url`` columns.
 
     ``wave_size`` picks the crash grain vs throughput tradeoff:
 
@@ -113,7 +111,7 @@ def run_stage_checkpointed(
     * ``w``: pending buckets run in committed waves of ``w``; data + the
       wave's lineage rows commit before the next wave starts, so a kill
       loses at most one wave.  Each wave re-scans the input to slice its
-      buckets (the bucket is a hash of ``key_col``, not a storage
+      buckets (the bucket is a hash of ``url``, not a storage
       partition), so the mode suits compute-dominated stages — extraction
       runs NLP inference at ~10⁴ docs/s/node while the parquet scan feeding
       it streams ~10⁶ rows/s — where an hours-long stage losing everything
@@ -122,9 +120,9 @@ def run_stage_checkpointed(
       partitions and the tradeoff disappears.
     """
     spark = inputs.sparkSession
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     done = completed_buckets(spark, lineage_path, stage)
-    bucketed = with_bucket(inputs, key_col, n_buckets)
+    bucketed = with_bucket(inputs, n_buckets)
     pending = sorted(set(range(n_buckets)) - done)
     if not pending:
         return {"processed": [], "skipped": sorted(done), "run_id": run_id,
@@ -144,8 +142,8 @@ def run_stage_checkpointed(
         for r in bucketed.where(F.col("bucket").isin(pending))
         .groupBy("bucket").agg(
             F.count("*").alias("n"),
-            F.min(key_col).alias("lo"),
-            F.max(key_col).alias("hi"),
+            F.min("url").alias("lo"),
+            F.max("url").alias("hi"),
         ).collect()
     }
     fs, _ = _hadoop_fs(spark, out_path)

@@ -143,7 +143,7 @@ def media_features(media: DataFrame, n_bins: int = 16,
     from seq2kg_spark.operators.repartition import salted_size_repartition
 
     balanced = salted_size_repartition(
-        media, F.length("payload"), "url", num_partitions=num_partitions
+        media, F.length("payload"), num_partitions=num_partitions
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

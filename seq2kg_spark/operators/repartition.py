@@ -5,13 +5,13 @@ repartition by url gives some tasks 10× the token count of others and the
 stage runs at straggler speed.  The north-star design (SURVEY.md §4.1):
 
 * bucket documents by length decile (``width_bucket``-style on a log scale),
-* salt within each bucket with a deterministic hash of the key,
+* salt within each bucket with a deterministic hash of the url,
 * repartition on (bucket, salt) so every task draws a near-uniform mix of
   document sizes.
 
 At 100 TB this is the difference between a stage bounded by mean task time
 and one bounded by the largest document in the corpus.  Deterministic: no
-``rand()`` — the salt derives from ``xxhash64(key)``, so reruns and resumes
+``rand()`` — the salt derives from ``xxhash64(url)``, so reruns and resumes
 place every row identically (required for lineage/resume).
 """
 
@@ -21,20 +21,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# log2 size classes: 256 B, 512 B, 1 KB, ... up to 32 KB and over.
+SIZE_BUCKETS = 8
+
+
 def salted_size_repartition(
     df: DataFrame,
-    size_col: Column | str,
-    key_col: Column | str = "url",
+    size_col: Column,
     num_partitions: int | None = None,
     salt_buckets: int = 512,
-    size_buckets: int = 8,
 ) -> DataFrame:
     """Repartition so each task gets a balanced mix of document sizes.
 
     ``size_col`` is any monotone size proxy (``length(text)`` is fine —
-    token count correlates).  Rows land in ``log2``-ish size buckets; the
-    shuffle key is (size_bucket, xxhash64(key) % salt_buckets), spreading
-    each size class across ``salt_buckets`` tasks.
+    token count correlates).  Rows land in ``SIZE_BUCKETS`` ``log2``-ish
+    size buckets; the shuffle key is (size_bucket, xxhash64(url) %
+    salt_buckets), spreading each size class across ``salt_buckets``
+    tasks.
 
     The partition count is always PINNED (``repartition(N, cols)`` carries
     the REPARTITION_BY_NUM shuffle origin, which AQE must preserve).  A
@@ -47,18 +50,16 @@ def salted_size_repartition(
     max(spark.sql.shuffle.partitions, 2 × defaultParallelism): a multiple of
     total cores, never a function of bytes.
     """
-    size_c = F.col(size_col) if isinstance(size_col, str) else size_col
-    key_c = F.col(key_col) if isinstance(key_col, str) else key_col
     # log2 of (size/256): byte-length buckets at 256/512/1k/.../32k+ — the
     # web-prose range.  A bare floor(log2(size)) saturates its cap for every
     # document over ~128 bytes, collapsing the whole corpus into ONE size
     # class and turning the "mix of sizes" key into salt-only.
     bucket = F.least(
-        F.lit(size_buckets - 1),
+        F.lit(SIZE_BUCKETS - 1),
         F.greatest(
             F.lit(0),
             F.floor(F.log2(F.greatest(
-                size_c.cast("double") / F.lit(256.0), F.lit(1.0)))),
+                size_col.cast("double") / F.lit(256.0), F.lit(1.0)))),
         ),
     ).alias("__size_bucket")
     # The salt hash MUST be decorrelated from any bucket id derived from the
@@ -70,7 +71,7 @@ def salted_size_repartition(
     # parallelism on 32 cores).  Seeding the hash with a literal breaks the
     # congruence; 512 salts over ~2×cores partitions keeps per-partition
     # key-count lumpiness (Poisson) small.
-    salt = F.pmod(F.xxhash64(F.lit("__seq2kg_salt__"), key_c),
+    salt = F.pmod(F.xxhash64(F.lit("__seq2kg_salt__"), F.col("url")),
                   F.lit(salt_buckets)).alias("__salt")
     out = df.withColumns({"__size_bucket": bucket, "__salt": salt})
     if not num_partitions:

@@ -27,10 +27,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from seq2kg_spark.functions.text_clean import clean_text_expr
-from seq2kg_spark.operators.repartition import salted_size_repartition
+from seq2kg_spark.operators.extract import clean_pages
 
 NEURAL_TRIPLES_SCHEMA = (
     "url string, subj string, pred string, obj string, "
@@ -40,6 +38,8 @@ NEURAL_TRIPLES_SCHEMA = (
 _WORD_RE = re.compile(r"[A-Za-z0-9]+(?:[-'][A-Za-z0-9]+)*|[^\sA-Za-z0-9]")
 
 MAX_SENT_LEN = 100
+# Hash-encoder embedding width == GRU hidden size (init_weights' default).
+DIM = 64
 
 
 def _split_sentences(tokens: list[str]) -> list[list[str]]:
@@ -158,28 +158,12 @@ def _infer_batches(weights_bc, dim: int):
 
 
 def neural_extract_triples(
-    pages: DataFrame,
-    *,
-    lang: str = "en",
-    dim: int = 64,
-    seed: int = 125,
-    num_partitions: int | None = None,
-    weights: dict | None = None,
+    pages: DataFrame, *, num_partitions: int | None = None
 ) -> DataFrame:
     """pages → typed triples via the BiGRU tagger (joint model path)."""
     from seq2kg_spark.nlp.gru import init_weights
 
-    spark = pages.sparkSession
-    w = weights if weights is not None else init_weights(dim=dim, hidden=dim,
-                                                         seed=seed)
-    weights_bc = spark.sparkContext.broadcast(w)
-    scanned = pages.where(F.col("lang") == lang).select("url", "text")
-    balanced = salted_size_repartition(
-        scanned, F.length("text"), "url", num_partitions=num_partitions
-    )
-    cleaned = balanced.select(
-        "url", clean_text_expr(F.col("text")).alias("clean_text")
-    )
-    return cleaned.mapInPandas(
-        _infer_batches(weights_bc, dim), schema=NEURAL_TRIPLES_SCHEMA
+    weights_bc = pages.sparkSession.sparkContext.broadcast(init_weights())
+    return clean_pages(pages, num_partitions, 512).mapInPandas(
+        _infer_batches(weights_bc, DIM), schema=NEURAL_TRIPLES_SCHEMA
     )

@@ -28,14 +28,13 @@ from seq2kg_spark.operators.canonicalize import (SIM_BAND_ROWS_DEFAULT,
                                                  SIM_N_BANDS_DEFAULT,
                                                  SIM_THRESHOLD_DEFAULT,
                                                  canonicalize, release_caches)
-from seq2kg_spark.operators.extract import extract_triples
+from seq2kg_spark.operators.extract import TRIPLES_SCHEMA, extract_triples
 from seq2kg_spark.operators.lineage import (_hadoop_fs,
                                             run_stage_checkpointed,
                                             with_bucket)
 
 
-def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
-                    n_buckets: int = 16):
+def curate_stage_fn(full_pages: DataFrame, *, n_buckets: int = 16):
     """Stage-0 corpus curation: keep English, quality-'ok', first-copy
     pages (min url per exact text hash wins).
 
@@ -50,7 +49,7 @@ def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
     round 7 for the shootout):
     lang gate (cheap column predicate, pushes into the scan) → ONE
     projection of the html→text decode → hash shuffle on md5(text) →
-    ``row_number`` window picks the min-``key_col`` winner per hash →
+    ``row_number`` window picks the min-``url`` winner per hash →
     quality gate ABOVE the window → broadcast-semi filter to the slice's
     buckets.
 
@@ -72,26 +71,12 @@ def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
     deciding legs).
     """
     from seq2kg_spark.functions import text_stats as TS
-    from seq2kg_spark.functions.html_text import (decode_html_expr,
-                                                  html_to_text_expr)
-
-    def decode_once(df: DataFrame) -> DataFrame:
-        # Pages that arrive with raw HTML only (text IS NULL) get stage-0
-        # boilerplate extraction inline — a pure Catalyst projection.
-        if "html" in df.columns:
-            df = df.withColumn(
-                "text",
-                F.coalesce(
-                    F.col("text"),
-                    html_to_text_expr(decode_html_expr(F.col("html"))),
-                ),
-            )
-        return df
+    from seq2kg_spark.functions.html_text import with_page_text
 
     def fn(bucketed: DataFrame) -> DataFrame:
         g = (
-            decode_once(with_bucket(full_pages, key_col, n_buckets)
-                        .where(F.col("lang") == "en"))
+            with_page_text(with_bucket(full_pages, n_buckets)
+                           .where(F.col("lang") == "en"))
             # Null-text guard BEFORE the hash shuffle: md5(NULL) is NULL,
             # so on a largely-null corpus every textless row would land in
             # ONE window partition and sort in a single task (skew/OOM
@@ -102,14 +87,14 @@ def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
             .withColumn("_h", F.md5("text"))
         )
         # NOTE (duplicate keys, intentional): row_number keeps exactly ONE
-        # row per text hash.  If two rows tie on BOTH the hash and key_col
+        # row per text hash.  If two rows tie on BOTH the hash and url
         # (the same url crawled twice with identical text), which physical
         # row survives is arbitrary — url, bucket and text of the winner
         # are still fully determined, so curation and resume decisions are
         # reproducible; only side columns of such exact re-crawls (e.g.
         # warc_ts) can differ between runs.  One-row-per-hash is the
         # contract; callers needing a total order add their own tiebreak.
-        w = Window.partitionBy("_h").orderBy(key_col)
+        w = Window.partitionBy("_h").orderBy("url")
         winners = (
             g.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
@@ -120,7 +105,7 @@ def curate_stage_fn(full_pages: DataFrame, *, key_col: str = "url",
         # distinct bucket-id list is ≤ n_buckets rows — a broadcast semi
         # join that Catalyst turns into a cheap filter.
         slice_buckets = (
-            with_bucket(bucketed, key_col, n_buckets)
+            with_bucket(bucketed, n_buckets)
             .select("bucket").distinct()
         )
         return winners.join(
@@ -161,30 +146,35 @@ def run_kg_pipeline(
 
     report_curate = run_stage_checkpointed(
         pages,
-        curate_stage_fn(pages, key_col="url", n_buckets=n_buckets),
+        curate_stage_fn(pages, n_buckets=n_buckets),
         stage="curate",
         out_path=curated_path,
         lineage_path=lineage_path,
-        key_col="url",
         n_buckets=n_buckets,
     )
     # keep the stored ``bucket`` PARTITION column: with_bucket trusts it, so
     # each extract wave's ``bucket IN (...)`` filter prunes the scan to the
-    # wave's directories instead of re-hashing the full curated table
-    pages = spark.read.parquet(curated_path)
+    # wave's directories instead of re-hashing the full curated table.
+    # Both stage tables are read with their known schema (the written
+    # columns, then the ``bucket`` partition column, as partition discovery
+    # orders them): a stage that committed zero rows leaves no parquet file
+    # to infer one from.
+    pages = spark.read.schema(with_bucket(pages, n_buckets).schema).parquet(
+        curated_path)
+
+    extract, triples_schema = extract_triples, TRIPLES_SCHEMA
+    if extractor == "neural":
+        from seq2kg_spark.operators.tagger_infer import (
+            NEURAL_TRIPLES_SCHEMA, neural_extract_triples)
+
+        extract, triples_schema = neural_extract_triples, NEURAL_TRIPLES_SCHEMA
 
     def extract_stage(bucketed: DataFrame) -> DataFrame:
         cols = bucketed.select("url", "text", "lang", "bucket")
-        if extractor == "neural":
-            from seq2kg_spark.operators.tagger_infer import (
-                neural_extract_triples)
-
-            t = neural_extract_triples(cols, num_partitions=num_partitions)
-        else:
-            t = extract_triples(cols, num_partitions=num_partitions)
+        t = extract(cols, num_partitions=num_partitions)
         # re-derive the bucket from url (the triples carry no bucket
         # column): deterministic, survives the UDF
-        return with_bucket(t, "url", n_buckets)
+        return with_bucket(t, n_buckets)
 
     report_extract = run_stage_checkpointed(
         pages,
@@ -192,12 +182,12 @@ def run_kg_pipeline(
         stage="extract",
         out_path=triples_path,
         lineage_path=lineage_path,
-        key_col="url",
         n_buckets=n_buckets,
         wave_size=extract_wave_size,
     )
 
-    triples = spark.read.parquet(triples_path)
+    triples = spark.read.schema(f"{triples_schema}, bucket int").parquet(
+        triples_path)
     nodes_path = os.path.join(workdir, "nodes")
     edges_path = os.path.join(workdir, "edges")
 

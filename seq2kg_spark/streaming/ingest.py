@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from seq2kg_spark.operators.lineage import _hadoop_fs
 from seq2kg_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -129,19 +130,12 @@ def stream_dedup_pages(
     ``dropDuplicates(["url","text_md5"])`` would never evict (the key set
     excludes the watermark column), leaking state on a long-running stream.
     """
-    from seq2kg_spark.functions.html_text import (decode_html_expr,
-                                                  html_to_text_expr)
+    from seq2kg_spark.functions.html_text import with_page_text
 
-    # same stage-0 seam as the batch curate gate: pages arriving with raw
-    # HTML only are extracted inline (pure Catalyst — streaming-safe)
-    if "html" in pages_stream.columns:
-        pages_stream = pages_stream.withColumn(
-            "text",
-            F.coalesce(F.col("text"),
-                       html_to_text_expr(decode_html_expr(F.col("html")))),
-        )
+    # same stage-0 seam as the batch curate gate
     deduped = (
-        pages_stream.withColumn("text_md5", F.md5(F.col("text")))
+        with_page_text(pages_stream)
+        .withColumn("text_md5", F.md5(F.col("text")))
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["url", "text_md5"])
         .drop("html")
@@ -291,13 +285,15 @@ def read_assignment(spark: SparkSession, assign_dir: str) -> DataFrame | None:
 
     Snapshots are hive-style ``batch=<id>`` dirs written by
     :func:`stream_incremental_canonicalize`; the max batch id wins.
-    Returns None when no snapshot exists yet (stream bootstrap)."""
-    try:
-        df = spark.read.parquet(assign_dir)
-    except Exception:
+    Returns None when no snapshot exists yet (stream bootstrap).  An
+    unreadable snapshot raises: read as "no history", it would make the
+    next micro-batch write an assignment of only its own norms, and the
+    retention pruning would then delete the good snapshots."""
+    fs, hpath = _hadoop_fs(spark, assign_dir)
+    if not fs.exists(hpath):
         return None
-    if "batch" not in df.columns or not df.columns:
-        return None
+    df = spark.read.schema(
+        "norm string, component string, batch int").parquet(assign_dir)
     latest = df.agg(F.max("batch")).collect()[0][0]
     if latest is None:
         return None
@@ -310,10 +306,6 @@ def stream_incremental_canonicalize(
     checkpoint_dir: str,
     *,
     available_now: bool = False,
-    threshold: float = 0.55,
-    n_bands: int | None = None,
-    max_bucket: int | None = None,
-    band_rows: int | None = None,
     keep_snapshots: int = 2,
     stats_sink: list | None = None,
 ):
@@ -339,17 +331,10 @@ def stream_incremental_canonicalize(
     operator watches.
     """
     from seq2kg_spark.operators.canonicalize import (
-        SIM_BAND_ROWS_DEFAULT,
-        SIM_MAX_BUCKET_DEFAULT,
-        SIM_N_BANDS_DEFAULT,
         incremental_assign,
         mentions_from_triples,
         release_caches,
     )
-
-    mb = SIM_MAX_BUCKET_DEFAULT if max_bucket is None else max_bucket
-    nb = SIM_N_BANDS_DEFAULT if n_bands is None else n_bands
-    br = SIM_BAND_ROWS_DEFAULT if band_rows is None else band_rows
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -359,29 +344,23 @@ def stream_incremental_canonicalize(
                 [], "norm string, component string")
         new_norms = mentions_from_triples(batch_df).select("norm")
         stats: dict = {}
-        merged = incremental_assign(
-            old, new_norms, threshold=threshold, n_bands=nb,
-            max_bucket=mb, band_rows=br, stats=stats)
+        merged = incremental_assign(old, new_norms, stats=stats)
         merged.write.mode("overwrite").parquet(
             f"{assign_dir}/batch={batch_id}")
         # snapshot is on disk — release the CC checkpoint backing `merged`
         # (the per-batch leak the round-6 ADVICE flagged)
         release_caches(merged)
         # prune old snapshots, never the one just written
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(assign_dir)
-        fs = hpath.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
-            for st in fs.listStatus(hpath):
-                name = st.getPath().getName()
-                if name.startswith("batch="):
-                    try:
-                        bid = int(name.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if bid <= batch_id - keep_snapshots:
-                        fs.delete(st.getPath(), True)
+        fs, hpath = _hadoop_fs(spark, assign_dir)
+        for st in fs.listStatus(hpath):
+            name = st.getPath().getName()
+            if name.startswith("batch="):
+                try:
+                    bid = int(name.split("=", 1)[1])
+                except ValueError:
+                    continue
+                if bid <= batch_id - keep_snapshots:
+                    fs.delete(st.getPath(), True)
         if stats_sink is not None:
             stats_sink.append((batch_id, stats))
 

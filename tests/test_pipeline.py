@@ -62,3 +62,21 @@ def test_canonicalize_recomputes_when_triples_change(spark, pages, tmp_path):
     # extract recomputed a bucket → fingerprint moved → canonicalize reran
     assert report["canonical"].get("skipped") is None
     assert report["canonical"]["cc_rounds"] >= 1
+
+
+def test_zero_row_stages_complete(spark, pages, tmp_path):
+    """A corpus the language gate empties commits zero-row stages, and the
+    stage after each still reads its table (no schema to infer from)."""
+    report = run_kg_pipeline(
+        pages.limit(50).withColumn("lang", F.lit("de")),
+        str(tmp_path / "kg_de"), n_buckets=4, num_partitions=4)
+    assert spark.read.parquet(report["paths"]["lineage"]).groupBy(
+        "stage").count().orderBy("stage").collect() == [
+        ("curate", 4), ("extract", 4)]
+    triples = spark.read.schema(
+        "url string, subj string, pred string, obj string, bucket int"
+    ).parquet(report["paths"]["triples"])
+    assert triples.count() == 0
+    assert spark.read.parquet(report["paths"]["nodes"]).count() == 0
+    assert spark.read.parquet(report["paths"]["edges"]).count() == 0
+    assert report["canonical"]["distinct_mentions"] == 0

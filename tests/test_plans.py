@@ -81,7 +81,7 @@ def test_curate_barrier_plan_shape(spark, pages, tmp_path):
     from seq2kg_spark.operators.lineage import with_bucket
     from seq2kg_spark.plans.pipeline import curate_stage_fn
 
-    out = curate_stage_fn(df, n_buckets=8)(with_bucket(df, "url", 8))
+    out = curate_stage_fn(df, n_buckets=8)(with_bucket(df, 8))
     plan = out._jdf.queryExecution().executedPlan().toString()
     # HARD check (the actual regression being pinned): one decode inline =
     # 18 regexp_replace nodes; allow the projection plus slack, but

@@ -6,6 +6,7 @@ union-closure semantics exactly equal to the full recompute.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from seq2kg_spark.operators.canonicalize import (
@@ -103,3 +104,27 @@ def test_snapshot_retention_and_latest_wins(spark, tmp_path):
     n_norms = mentions_from_triples(union).select("norm").distinct().count()
     final = read_assignment(spark, assign_dir)
     assert final.count() == final.select("norm").distinct().count() == n_norms
+
+
+def test_read_assignment_history_states(spark, tmp_path):
+    """No dir, or only a write's _temporary leftover: no history yet.  An
+    unreadable snapshot raises instead of passing for "no history", which
+    would let the next batch write an assignment of only its own norms and
+    the retention pruning delete the good snapshots."""
+    assign_dir = str(tmp_path / "assign_states")
+    assert read_assignment(spark, assign_dir) is None
+    os.makedirs(f"{assign_dir}/_temporary/0")
+    assert read_assignment(spark, assign_dir) is None
+
+    corrupt_dir = str(tmp_path / "assign_corrupt")
+    os.makedirs(f"{corrupt_dir}/batch=3")
+    with open(f"{corrupt_dir}/batch=3/part-00000.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|FAILED_READ_FILE"):
+        read_assignment(spark, corrupt_dir)
+
+    for b, comp in ((1, "a"), (2, "b")):
+        spark.createDataFrame([("x", comp)], "norm string, component string") \
+            .write.parquet(f"{assign_dir}/batch={b}")
+    assert [tuple(r) for r in read_assignment(spark, assign_dir).collect()] \
+        == [("x", "b")]

@@ -24,8 +24,7 @@ def _curate_plan(pages):
     from seq2kg_spark.operators.lineage import with_bucket
     from seq2kg_spark.plans.pipeline import curate_stage_fn
 
-    return curate_stage_fn(pages, n_buckets=16)(
-        with_bucket(pages, "url", 16))
+    return curate_stage_fn(pages, n_buckets=16)(with_bucket(pages, 16))
 
 
 def main() -> None:
