@@ -36,8 +36,8 @@ from seq2kg_spark.operators.dedup import lsh_bucket_pairs
 #
 # Everything this module persists (the norm shingle-set .persist() in
 # similarity_edges, the input and per-round localCheckpoints in
-# connected_components, the two naming-chain localCheckpoints in
-# canonicalize) is released as soon as its last consumer has MATERIALIZED
+# connected_components, the naming localCheckpoint in canonicalize) is
+# released as soon as its last consumer has MATERIALIZED
 # — mid-computation where possible, otherwise through a release handle
 # attached to the returned DataFrame(s).  Without this, a
 # long-lived session calling canonicalize / incremental_assign per batch
@@ -401,8 +401,10 @@ def connected_components(
 
 def _assign(norms: DataFrame, sim: DataFrame, extra: DataFrame | None,
             stats: dict | None) -> DataFrame:
-    """(norm) → (norm, component): CC over ``sim`` (∪ ``extra`` edges);
-    every norm gets a component, singletons map to themselves.
+    """``norms`` (any frame with a ``norm`` column) plus ``component``: CC
+    over ``sim`` (∪ ``extra`` edges); every norm gets a component,
+    singletons map to themselves.  The input's columns are kept, so
+    mentions meet their components in this one join.
 
     CC checkpoints its input before the first round, so the similarity
     persist is released here; the final CC snapshot backs the result
@@ -412,9 +414,8 @@ def _assign(norms: DataFrame, sim: DataFrame, extra: DataFrame | None,
     release_caches(sim)
     out = (
         norms.join(comp, F.col("norm") == F.col("node"), "left")
-        .select(
-            "norm", F.coalesce("component", F.col("norm")).alias("component")
-        )
+        .withColumn("component", F.coalesce("component", F.col("norm")))
+        .drop("node")
     )
     out._canon_caches = comp._canon_caches
     return out
@@ -435,62 +436,51 @@ def canonicalize(
     Cache lifetime: the similarity-edge persist is released as soon as
     CC returns (its input checkpoint is the last consumer); the mentions
     cache and every CC snapshot are released BEFORE this returns (the
-    eager naming-chain checkpoint is the last consumer of all of them).
-    The two checkpoints that back the returned ``nodes``/``edges`` lazily
-    carry a shared release handle — call :func:`release_caches` on either
-    output after writing both.
+    eager naming checkpoint is the last consumer of all of them).  That
+    one checkpoint backs the returned ``nodes`` and ``edges`` lazily;
+    both outputs carry its release handle — call :func:`release_caches`
+    on either output after writing both.
     """
     mentions = mentions_from_triples(triples).cache()
-    norms = mentions.select("norm").distinct()
-    norm_comp = _assign(
-        norms, similarity_edges(mentions, threshold=threshold), None, stats)
+    sim = similarity_edges(mentions, threshold=threshold)
+    assigned = _assign(mentions, sim, None, stats)
     if stats is not None:
-        stats["distinct_mentions"] = norms.count()
-    # One row per mention surface.  localCheckpoint (same lineage-cut budget
-    # as the CC rounds) because FIVE downstream subtrees reference it — the
-    # canon window, nodes, and both edge-side maps; without the cut each
-    # write action re-runs the mentions→components join chain from scratch
-    # (measured: the 500k-page canonicalize stage spent most of its 179 s
-    # recomputing this naming chain per action).
-    m, m_release = _tracked_local_checkpoint(mentions.join(norm_comp, "norm"))
-    # m is materialized and lineage-cut: the mentions cache and the final
-    # CC snapshot have no remaining consumers
-    mentions.unpersist()
-    release_caches(norm_comp)
-    # canonical surface: most frequent, then longest, then lexicographic
+        stats["distinct_mentions"] = mentions.select("norm").distinct().count()
+    # canonical surface: most frequent, then longest, then lexicographic —
+    # mentions are unique, so the order is total and its first row exact
     w = Window.partitionBy("component").orderBy(
         F.desc("freq"), F.desc(F.length("mention")), F.asc("mention")
     )
-    named = m.withColumn("rnk", F.row_number().over(w))
-    canon = named.where(F.col("rnk") == 1).select(
-        "component", F.col("mention").alias("canonical")
-    )
+    # One named row per mention surface.  localCheckpoint (same lineage-cut
+    # budget as the CC rounds) because the nodes write and both edge-side
+    # maps read it; without the cut each write action re-runs the
+    # mentions→components join and the window (measured: the 500k-page
+    # canonicalize stage spent most of its 179 s recomputing this naming
+    # chain per action).  Its concrete (small) size also lets AQE broadcast
+    # the maps into the big triples join instead of shuffling 2×|triples|.
+    named, release = _tracked_local_checkpoint(assigned.select(
+        "mention", "freq", "component",
+        F.xxhash64("component").alias("canon_id"),
+        F.first("mention").over(w).alias("canonical"),
+    ))
+    # named is materialized and lineage-cut: the mentions cache and the
+    # final CC snapshot have no remaining consumers
+    mentions.unpersist()
+    release_caches(assigned)
     nodes = (
-        m.join(canon, "component")
-        .groupBy("component", "canonical")
+        named.groupBy("component", "canon_id", "canonical")
         .agg(
             F.array_sort(F.collect_set("mention")).alias("members"),
             F.sum("freq").cast("long").alias("n_mentions"),
         )
-        .withColumn("canon_id", F.xxhash64("component"))
         .select("canon_id", "canonical", "members", "n_mentions")
     )
-    # Referenced twice (subject and object side of the triples join) and by
-    # a separate write action — checkpoint so the window + join above run
-    # once, and AQE sees a concrete (small) size and broadcasts it into the
-    # big triples join instead of shuffling 2×|triples| rows.
-    mention_to_canon, mtc_release = _tracked_local_checkpoint(
-        m.join(canon, "component").select(
-            F.col("mention"), F.xxhash64("component").alias("canon_id"),
-            F.col("canonical"),
-        ).dropDuplicates(["mention"])
-    )
-    s_map = mention_to_canon.select(
+    s_map = named.select(
         F.col("mention").alias("subj"),
         F.col("canon_id").alias("src"),
         F.col("canonical").alias("src_name"),
     )
-    o_map = mention_to_canon.select(
+    o_map = named.select(
         F.col("mention").alias("obj"),
         F.col("canon_id").alias("dst"),
         F.col("canonical").alias("dst_name"),
@@ -501,12 +491,10 @@ def canonicalize(
         .groupBy("src", "src_name", F.col("pred"), "dst", "dst_name")
         .agg(F.count("*").cast("long").alias("weight"))
     )
-    # one shared handle list: releasing via EITHER output releases both
-    # checkpoints, and release_caches clears the list so the second call
+    # one shared handle list: releasing via EITHER output releases the
+    # checkpoint, and release_caches clears the list so the second call
     # is a no-op
-    shared = [m_release, mtc_release]
-    nodes._canon_caches = shared
-    edges._canon_caches = shared
+    nodes._canon_caches = edges._canon_caches = [release]
     return nodes, edges
 
 

@@ -253,7 +253,7 @@ def run_kg_pipeline(
         nodes, edges = canonicalize(triples, stats=canon_stats)
         nodes.write.mode("overwrite").parquet(nodes_path)
         edges.write.mode("overwrite").parquet(edges_path)
-        # both outputs are on disk — drop the naming-chain checkpoints so
+        # both outputs are on disk — drop the naming checkpoint so
         # a long-lived session running pipelines back-to-back doesn't
         # accumulate cached blocks
         release_caches(nodes, edges)

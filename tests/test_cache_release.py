@@ -64,10 +64,10 @@ def test_canonicalize_releases_everything(spark):
     n_nodes = nodes.count()       # materialize both outputs first
     n_edges = edges.count()
     assert n_nodes > 0 and n_edges > 0
-    # mid-check: only the two naming-chain checkpoints may remain alive
-    # (everything upstream — mentions cache, similarity persists, CC round
-    # snapshots — was released inside canonicalize)
-    assert len(_persistent_ids(spark) - before) <= 2
+    # mid-check: only the naming checkpoint may remain alive (everything
+    # upstream — mentions cache, similarity persists, CC round snapshots —
+    # was released inside canonicalize)
+    assert len(_persistent_ids(spark) - before) <= 1
 
     release_caches(nodes, edges)  # shared handle list: one call suffices
     leaked = _persistent_ids(spark) - before

@@ -157,3 +157,49 @@ def test_lsh_bucket_builder_matches_guarded_self_join(
                            **shape)
     assert {(r.a, r.b) for r in sim.collect()} == ref_new
     release_caches(sim)
+
+
+def test_canonical_name_tie_break(spark):
+    """Canonical surface = most frequent, then longest, then smallest.
+    All three "acme" surfaces that can win appear twice; two of them are
+    also the longest (11 chars), so the binary order picks "ACME CORP's"
+    over "Acme Corp's".  "--Acme Corp" is as long but less frequent.
+    "Jane Doe" wins on frequency over the longer "JANE DOE's"."""
+    triples = spark.createDataFrame(
+        [
+            ("u1", "ACME CORP's", "employs", "Jane Doe"),
+            ("u2", "Acme Corp's", "employs", "jane doe"),
+            ("u3", "acme corp", "employs", "Jane Doe"),
+            ("u4", "Jane Doe", "founded", "ACME CORP's"),
+            ("u5", "JANE DOE's", "founded", "Acme Corp's"),
+            ("u6", "--Acme Corp", "sued", "Zeta Systems"),
+            ("u7", "acme corp", "sued", "Zeta Systems"),
+        ],
+        "url string, subj string, pred string, obj string",
+    )
+    nodes, edges = canonicalize(triples)
+    # each entity's surfaces share one norm, so component == that norm
+    comps = ["acme corp", "jane doe", "zeta systems"]
+    ids = spark.createDataFrame([(c,) for c in comps], "c string").select(
+        "c", F.xxhash64("c").alias("h")).collect()
+    cid = {r.c: r.h for r in ids}
+    got_nodes = {(r.canon_id, r.canonical, tuple(r.members), r.n_mentions)
+                 for r in nodes.collect()}
+    assert got_nodes == {
+        (cid["acme corp"], "ACME CORP's",
+         ("--Acme Corp", "ACME CORP's", "Acme Corp's", "acme corp"), 7),
+        (cid["jane doe"], "Jane Doe",
+         ("JANE DOE's", "Jane Doe", "jane doe"), 5),
+        (cid["zeta systems"], "Zeta Systems", ("Zeta Systems",), 2),
+    }
+    got_edges = {(r.src, r.src_name, r.pred, r.dst, r.dst_name, r.weight)
+                 for r in edges.collect()}
+    assert got_edges == {
+        (cid["acme corp"], "ACME CORP's", "employs",
+         cid["jane doe"], "Jane Doe", 3),
+        (cid["jane doe"], "Jane Doe", "founded",
+         cid["acme corp"], "ACME CORP's", 2),
+        (cid["acme corp"], "ACME CORP's", "sued",
+         cid["zeta systems"], "Zeta Systems", 2),
+    }
+    release_caches(nodes, edges)

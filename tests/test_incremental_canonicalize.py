@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from seq2kg_spark.operators.canonicalize import (
     connected_components,
     incremental_assign,
+    release_caches,
     similarity_edges,
 )
 
@@ -66,3 +67,15 @@ def test_incremental_never_unmerges(spark):
         for b in before:
             if before[a] == before[b]:
                 assert got[a] == got[b]
+
+
+def test_incremental_assign_keeps_norm_component_schema(spark):
+    """The streaming snapshot is written from this result and read back
+    with the schema ``norm string, component string``: no join key or
+    other helper column may leak into it."""
+    old_assign = spark.createDataFrame(
+        [("acme corp", "acme corp")], "norm string, component string")
+    out = incremental_assign(
+        old_assign, _norms(spark, ["acme corporation", "brand new thing"]))
+    assert out.dtypes == [("norm", "string"), ("component", "string")]
+    release_caches(out)
