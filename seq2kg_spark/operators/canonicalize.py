@@ -223,10 +223,13 @@ def similarity_edges(
     # pairs themselves (same shape as dedup.minhash_lsh_pairs' set-join
     # verification).
     flag = ["_new"] if new_flag_col else []
+    # the row count is observed on the job that first fills the persist
+    # (the CC input checkpoint), not by an action of its own
+    n_norms = Observation()
     norm_sets = norms.select(
         "norm", *flag,
         F.array_sort(_char_shingles(F.col("norm"))).alias("shingles"),
-    ).persist()
+    ).observe(n_norms, F.count(F.lit(1)).alias("n")).persist()
     # Banded min-signatures without exploding shingles: per (norm, band),
     # sig = min over the row's shingle array of hash(band, j, shingle) — a
     # narrow transform + array_min.  xxhash64 (8-byte ints, JVM-side) is
@@ -272,6 +275,7 @@ def similarity_edges(
         .select("a", "b")
     )
     out._canon_caches = [norm_sets.unpersist, *extra_releases]
+    out._n_norms = n_norms
     return out
 
 
@@ -445,7 +449,15 @@ def canonicalize(
     sim = similarity_edges(mentions, threshold=threshold)
     assigned = _assign(mentions, sim, None, stats)
     if stats is not None:
-        stats["distinct_mentions"] = mentions.select("norm").distinct().count()
+        # one row per distinct norm, counted as CC's input checkpoint
+        # filled the similarity persist.  When no candidate pair survives,
+        # AQE drops the observed scan from the executed plan and the
+        # observation completes with an empty row (which Observation.get
+        # cannot convert, hence the JVM row); only then is the count a job
+        observed = sim._n_norms._jo.getRow()
+        stats["distinct_mentions"] = (
+            observed.getLong(0) if observed.size() else
+            mentions.select("norm").distinct().count())
     # canonical surface: most frequent, then longest, then lexicographic —
     # mentions are unique, so the order is total and its first row exact
     w = Window.partitionBy("component").orderBy(

@@ -10,6 +10,7 @@ from seq2kg_spark.operators.canonicalize import (
     release_caches,
     similarity_edges,
     mentions_from_triples,
+    normalize_mention,
 )
 from seq2kg_spark.operators.dedup import band_signature, lsh_bucket_pairs
 
@@ -203,3 +204,33 @@ def test_canonical_name_tie_break(spark):
          cid["zeta systems"], "Zeta Systems", 2),
     }
     release_caches(nodes, edges)
+
+
+@pytest.mark.parametrize("source", ["corpus", "no-candidates"])
+def test_distinct_mentions_stat_matches_independent_count(
+        spark, pages, source):
+    """``stats["distinct_mentions"]`` is read from an observation on the
+    similarity input, and from a count of its own only when AQE drops
+    the observed scan (no candidate pair survives): both must equal the
+    distinct non-empty normalized subjects and objects."""
+    if source == "corpus":
+        from seq2kg_spark.operators.extract import extract_triples
+
+        triples = extract_triples(pages, num_partitions=4)
+    else:
+        triples = spark.createDataFrame(
+            [("u1", "Alpha Corp", "p", "alpha corp."), ("u2", "x", "q", "")],
+            "url string, subj string, pred string, obj string")
+    triples = triples.cache()
+    norms = (triples.select(F.col("subj").alias("m"))
+             .union(triples.select("obj"))
+             .select(normalize_mention(F.col("m")).alias("n"))
+             .where(F.col("n") != "").distinct())
+    want = norms.count()
+    stats = {}
+    nodes, edges = canonicalize(triples, stats=stats)
+    nodes.count()
+    release_caches(nodes)
+    triples.unpersist()
+    assert want > (300 if source == "corpus" else 1)
+    assert stats["distinct_mentions"] == want
