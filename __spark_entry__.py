@@ -1524,14 +1524,14 @@ def _lsh_topk_int_oracle(n_bits: int = 8, n_tables: int = 2,
     """DuckDB twin of lsh_topk_int: the deterministic integer hyperplanes
     are inlined as literals; bucket codes and the re-rank dot are all
     BIGINT-exact, ties by neighbor id — bit-identical to the Spark side."""
-    from seq2kg_spark.operators.ann import int_hyperplanes
+    from seq2kg_spark.operators.ann import hyperplanes
 
-    planes = int_hyperplanes(n_tables, n_bits, 64)
+    planes = hyperplanes(n_tables, n_bits, 64, quant=1000).tolist()
 
     def code_expr(tbl: int) -> str:
         terms = []
         for b in range(n_bits):
-            lit = ", ".join(str(v) for v in planes[tbl][b])
+            lit = ", ".join(str(v) for v in planes[tbl * n_bits + b])
             terms.append(
                 f"(CASE WHEN CAST(list_dot_product(qv, [{lit}]::BIGINT[]) "
                 f"AS BIGINT) >= 0 THEN {1 << b} ELSE 0 END)"

@@ -364,7 +364,7 @@ FX_SCALE = 1024
 def int_gru_weights(D: int = 8, H: int = 8, seed: int = 11,
                     scale: int = 64) -> dict:
     """Deterministic small-int GRU weights (md5-derived — no RNG, so the
-    DuckDB twin inlines the identical literals; int_hyperplanes pattern)."""
+    DuckDB twin inlines the identical literals; ann.hyperplanes pattern)."""
     import hashlib
 
     def val(tag: str, j: int, i: int) -> int:

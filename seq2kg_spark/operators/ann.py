@@ -1,19 +1,25 @@
 """Similarity search over an embedding column (array<float>).
 
-* ``brute_force_topk`` — exact top-k by quantized-integer dot product.
-  Quantization (round(x*1000) → int64) makes the arithmetic exact, so
-  ranking is deterministic across engines (the DuckDB oracle matches
-  bit-for-bit) and across partitionings.  The join is
-  queries × corpus — fine when the query set is small (broadcast) —
-  ranking via a window, ties broken by vec_id.
+Every search is one plan (:func:`_topk`): the query rows are broadcast
+and joined to the corpus on a bucket key (a cross join for brute force),
+self pairs are dropped, each pair is scored, and the k best rows per query
+are kept, ties broken by neighbor id.  The broadcast query side against
+the partitioned corpus is the one join choice all variants share.  They
+differ only in the bucket key and the re-rank metric:
 
-* ``lsh_bucketed_topk`` — the scale path: random-hyperplane LSH buckets
-  (signs of dot with seeded deterministic hyperplanes), candidates only
-  within bucket (multi-probe via n_tables), then exact re-rank.  At 10^9
-  vectors the bucket join replaces the full cross product; recall is
-  tunable with n_bits/n_tables.
+* ``brute_force_topk`` — no key, exact quantized-int dot.  Quantization
+  (round(x*1000) → int64) makes the arithmetic exact, so ranking is
+  deterministic across engines (the DuckDB oracle matches bit-for-bit)
+  and across partitionings.
+* ``lsh_topk_int`` / ``lsh_bucketed_topk`` — random-hyperplane sign-LSH,
+  one bucket code per table (multi-probe via n_tables).  At 10^9 vectors
+  the bucket join replaces the full cross product; recall is tunable with
+  n_bits/n_tables.
+* ``ivf_topk_int`` / ``ivf_topk`` — coarse-quantizer cells: queries probe
+  their n_probe nearest cells, the corpus sits in its nearest one.
 
-* true-cosine variants keep float math JVM-side via aggregate/zip_with.
+The ``_int`` variants re-rank by the exact dot (engine-exact, oracled);
+the float ones by cosine, computed JVM-side via aggregate/zip_with.
 """
 
 from __future__ import annotations
@@ -128,6 +134,58 @@ def _probe_dim(emb: DataFrame, vec_col: str) -> int | None:
     return len(row[0])
 
 
+def _dot(dim: int | None):
+    """Exact re-rank metric: quantized-int dot, reported as ``dot``."""
+    return "dot", int_dot("qv", "cv", dim=dim), F.col("dot")
+
+
+def _cosine(dim: int | None):
+    """Float re-rank metric: cosine, reported rounded to 4 places."""
+    return ("cosine", float_cosine("qv", "cv", dim=dim),
+            F.round("cosine", 4).alias("cosine"))
+
+
+def _topk(emb: DataFrame, query_ids, id_col: str, vec, k: int, metric,
+          key=None, probe=None, home=None, dedup: bool = False) -> DataFrame:
+    """(query_id, rank, neighbor_id, <metric>) — the k best-scoring corpus
+    rows per query (all rows are queries when ``query_ids`` is None).
+
+    ``vec`` is the vector Column both sides score with ``metric`` (a
+    :func:`_dot` / :func:`_cosine` triple).  ``key`` is a pandas UDF from a
+    vector to its array of bucket keys; ``probe`` and ``home`` turn that
+    array into the query's and the corpus row's join columns.  Without a
+    key the join is queries × corpus.  ``dedup`` drops the duplicate pairs
+    a query meets when a corpus row has several keys (LSH tables).
+    """
+    name, score, out = metric
+    vecs = emb.select(F.col(id_col).alias("vid"), vec.alias("v"))
+    q = vecs if query_ids is None else vecs.where(F.col("vid").isin(query_ids))
+    q = q.select(F.col("vid").alias("query_id"), F.col("v").alias("qv"))
+    if key is None:
+        pairs = F.broadcast(q).crossJoin(vecs)
+    else:
+        # Nondeterministic, so Catalyst pushes no inferred filter on the
+        # keys (isnotnull, size > 0) below the projection computing them:
+        # such a copy ran the UDF, one matmul per row, twice on each side.
+        key = key.asNondeterministic()
+        q = q.select("*", *probe(key(F.col("qv"))))
+        pairs = F.broadcast(q).join(
+            vecs.select("*", *home(key(F.col("v")))), q.columns[2:])
+    pairs = pairs.select("query_id", "qv", F.col("vid").alias("neighbor_id"),
+                         F.col("v").alias("cv")) \
+        .where(F.col("query_id") != F.col("neighbor_id"))
+    if dedup:
+        pairs = pairs.dropDuplicates(["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(F.desc(name),
+                                               F.asc("neighbor_id"))
+    return (
+        pairs.withColumn(name, score)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", out)
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int] | None = None,
@@ -137,31 +195,8 @@ def brute_force_topk(
     quant: int = 1000,
 ) -> DataFrame:
     """(query_id, rank, neighbor_id, dot) — exact top-k, integer math."""
-    dim = _probe_dim(emb, vec_col)
-    q = emb.select(
-        F.col(id_col).alias("query_id"),
-        quantized(F.col(vec_col), quant).alias("qv"),
-    )
-    if query_ids is not None:
-        q = q.where(F.col("query_id").isin(query_ids))
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantized(F.col(vec_col), quant).alias("cv"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("dot", int_dot("qv", "cv", dim=dim))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dot")
-    )
+    return _topk(emb, query_ids, id_col, quantized(F.col(vec_col), quant), k,
+                 _dot(_probe_dim(emb, vec_col)))
 
 
 def _hyperplane(seed: int, dim: int, table: int, bit: int) -> list[float]:
@@ -177,42 +212,51 @@ def _hyperplane(seed: int, dim: int, table: int, bit: int) -> list[float]:
     return out
 
 
-def float_hyperplanes(n_tables: int, n_bits: int, dim: int,
-                      seed: int = 42) -> np.ndarray:
-    """(n_tables·n_bits) × dim float64 matrix; row t·n_bits+b = plane (t, b)."""
-    return np.asarray(
-        [_hyperplane(seed, dim, t, b)
-         for t in range(n_tables) for b in range(n_bits)],
-        dtype=np.float64,
-    )
+def hyperplanes(n_tables: int, n_bits: int, dim: int, seed: int = 42,
+                quant: int | None = None) -> np.ndarray:
+    """(n_tables·n_bits) × dim matrix; row t·n_bits+b = plane (t, b).
+    float64 planes, or with ``quant`` the planes on the :func:`quantized`
+    grid as int64, so the sign decision ``dot >= 0`` is exact 64-bit
+    integer math — reproducible bit-for-bit across engines."""
+    P = np.asarray([_hyperplane(seed, dim, t, b)
+                    for t in range(n_tables) for b in range(n_bits)],
+                   dtype=np.float64)
+    return P if quant is None else np.rint(P * quant).astype(np.int64)
 
 
-def _sign_codes_udf(spark, planes: np.ndarray, n_tables: int, n_bits: int):
-    """array<long> bucket codes (one per table) from ONE Arrow-batched
-    matmul against a once-per-executor broadcast plane matrix.
-
-    This replaces the former plan-literal expression tree — n_tables·n_bits
-    planes × dim literals plus one aggregate(zip_with) per plane compiled
-    straight into the plan, the same O(k·dim)-literal codegen blowup the
-    IVF codebook fix removed (at production dims, 768 × 32 planes ≈ 25k
-    literals).  Planes ship once per executor; per batch the work is a
-    single V @ Mᵀ.
-    """
-    bc = spark.sparkContext.broadcast(planes)
-
-    @pandas_udf("array<long>")
-    def codes(v: pd.Series) -> pd.Series:
+def _matmul_udf(bc, return_type: str, rows):
+    """pandas UDF: each Arrow batch stacked into one matrix V in the dtype
+    of the broadcast matrix M, one output row per vector from
+    ``rows(V, M)``.  Per batch the work is one matmul against M, shipped
+    once per executor — never plan literals (a 768-dim table of 32 planes
+    or a k=2^16 codebook would compile to tens of thousands of them)."""
+    @pandas_udf(return_type)
+    def apply(v: pd.Series) -> pd.Series:
         M = bc.value
         if len(v) == 0:
             return pd.Series([], dtype=object)
         V = np.stack([np.asarray(x, dtype=M.dtype) for x in v])
-        signs = (V @ M.T) >= 0                      # B × (tables·bits)
-        weights = 1 << np.arange(n_bits, dtype=np.int64)
-        by_table = signs.reshape(len(V), n_tables, n_bits)
-        out = (by_table * weights[None, None, :]).sum(axis=2)
-        return pd.Series([row.tolist() for row in out])
+        return pd.Series([row.tolist() for row in rows(V, M)])
 
-    return codes
+    return apply
+
+
+def _lsh(emb, query_ids, id_col, vec, k, metric, planes, n_tables, n_bits):
+    """Sign-LSH top-k: array<long> bucket codes (one per table) from the
+    signs of ``vec`` against ``planes``, candidates only within a bucket."""
+    weights = 1 << np.arange(n_bits, dtype=np.int64)
+
+    def codes(V, M):
+        signs = ((V @ M.T) >= 0).reshape(len(V), n_tables, n_bits)
+        return (signs * weights[None, None, :]).sum(axis=2)
+
+    def buckets(c):
+        return [F.posexplode(c).alias("t", "code")]
+
+    bc = emb.sparkSession.sparkContext.broadcast(planes)
+    return _topk(emb, query_ids, id_col, vec, k, metric,
+                 _matmul_udf(bc, "array<long>", codes), buckets, buckets,
+                 dedup=True)
 
 
 def lsh_bucketed_topk(
@@ -226,114 +270,16 @@ def lsh_bucketed_topk(
     n_tables: int = 4,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate top-k: sign-LSH bucket join, exact float-cosine re-rank
-    in-bucket.
+    """Approximate top-k: float sign-LSH buckets, float-cosine re-rank.
 
-    Bucket codes come from :func:`_sign_codes_udf` — ONE Arrow-batched
-    float64 matmul against the once-per-executor broadcast plane matrix
-    (no plan literals), candidates meet in a bucket equi-join, never a
-    cross product.  Sign decisions use numpy's float64 dot rather than a
-    sequential Catalyst fold; the two can differ only when |dot| is within
+    Sign decisions use numpy's float64 dot rather than a sequential
+    Catalyst fold; the two can differ only when |dot| is within
     summation-reordering noise of 0 (measured: zero bucket flips on the
     test corpora), and the variant is rows-only checked anyway — the
     engine-exact twin is :func:`lsh_topk_int`.
     """
-    spark = emb.sparkSession
-    codes = _sign_codes_udf(
-        spark, float_hyperplanes(n_tables, n_bits, dim, seed),
-        n_tables, n_bits,
-    )
-    tagged = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
-    ).withColumn("codes", codes(F.col("v")))
-    base = tagged.select(
-        "vid", "v", F.posexplode("codes").alias("t", "code"))
-    q = (
-        tagged.where(F.col("vid").isin(query_ids))
-        .select(F.col("vid").alias("query_id"), F.col("v").alias("qv"),
-                F.posexplode("codes").alias("t", "code"))
-    )
-    cands = (
-        F.broadcast(q)
-        .join(base, ["t", "code"])
-        .where(F.col("vid") != F.col("query_id"))
-        .select("query_id", "qv", F.col("vid").alias("neighbor_id"),
-                F.col("v").alias("cv"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", float_cosine("qv", "cv", dim=dim))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("cosine", 4).alias("cosine"))
-    )
-
-
-def broadcast_codebook(spark, centroids, integer: bool = False):
-    """Ship a codebook once per executor as a Spark broadcast numpy matrix.
-    Callers that rebuild codebooks in a loop (the k-means trainer) should
-    ``destroy()`` each handle after its job completes — a k=2^16 × 768
-    codebook is hundreds of MB, and per-iteration broadcasts accumulate on
-    the driver and executors otherwise."""
-    dtype = np.int64 if integer else np.float64
-    return spark.sparkContext.broadcast(np.asarray(centroids, dtype=dtype))
-
-
-def nearest_cells_from_broadcast(bc, n_cells_out: int = 1):
-    """Vectorized cell assignment over an existing broadcast codebook:
-    pandas UDF returning the ``n_cells_out`` nearest centroid ids
-    (squared L2, ties broken by lower cell id).
-
-    The per-batch work is one Arrow-batched matmul — this replaces the
-    former plan-literal CASE chain, whose O(k·dim) literals blew up plan
-    size and whole-stage codegen beyond k≈8 (a real IVF coarse quantizer is
-    k=2^10..2^16).  An int64 codebook keeps every step exact (argsort over
-    exact distances ⇒ bit-reproducible across engines).  The float path
-    uses the ||v||² − 2v·c + ||c||² expansion, which is not bit-identical
-    to a direct (v−c)² accumulation — catastrophic cancellation on
-    near-tie distances can flip the argmin cell, acceptable for the
-    approximate un-oracled float variants only.
-    """
-    n = n_cells_out
-
-    @pandas_udf("array<int>")
-    def nearest(v: pd.Series) -> pd.Series:
-        C = bc.value
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        V = np.stack([np.asarray(x, dtype=C.dtype) for x in v])
-        # ||v-c||² = ||v||² − 2v·c + ||c||²; exact in int64 when quantized
-        d = ((V * V).sum(axis=1)[:, None] - 2 * (V @ C.T)
-             + (C * C).sum(axis=1)[None, :])
-        idx = np.argsort(d, axis=1, kind="stable")[:, :n]
-        return pd.Series([row.tolist() for row in idx.astype(np.int32)])
-
-    return nearest
-
-
-def nearest_cells_udf(spark, centroids, n_cells_out: int = 1,
-                      integer: bool = False):
-    """One-shot convenience: broadcast the codebook and build the
-    assignment UDF (see :func:`nearest_cells_from_broadcast`)."""
-    return nearest_cells_from_broadcast(
-        broadcast_codebook(spark, centroids, integer), n_cells_out)
-
-
-def int_hyperplanes(n_tables: int, n_bits: int, dim: int, seed: int = 42,
-                    quant: int = 1000) -> list[list[list[int]]]:
-    """[table][bit] → integer hyperplane (the float planes scaled to the
-    same fixed-point grid as :func:`quantized`), so the sign decision
-    ``dot >= 0`` is exact 64-bit integer math — reproducible bit-for-bit
-    across engines."""
-    return [
-        [[int(round(x * quant)) for x in _hyperplane(seed, dim, t, b)]
-         for b in range(n_bits)]
-        for t in range(n_tables)
-    ]
+    return _lsh(emb, query_ids, id_col, F.col(vec_col), k, _cosine(dim),
+                hyperplanes(n_tables, n_bits, dim, seed), n_tables, n_bits)
 
 
 def lsh_topk_int(
@@ -352,43 +298,42 @@ def lsh_topk_int(
     hyperplanes decide buckets (sign of an int64 dot), quantized-int dot
     re-ranks in-bucket, ties by neighbor id — so a DuckDB oracle can
     reproduce the result bit-for-bit (the float-cosine variant
-    :func:`lsh_bucketed_topk` cannot be oracled).
+    :func:`lsh_bucketed_topk` cannot be oracled)."""
+    return _lsh(emb, query_ids, id_col, quantized(F.col(vec_col), quant), k,
+                _dot(dim), hyperplanes(n_tables, n_bits, dim, seed, quant),
+                n_tables, n_bits)
 
-    Same scale shape: bucket codes come from ONE Arrow-batched matmul
-    against a once-per-executor broadcast plane matrix (n_tables·n_bits
-    planes — no plan literals), candidates meet in a bucket equi-join,
-    never a cross product.
+
+def nearest_cells(bc, n_cells_out: int = 1):
+    """Cell assignment against the broadcast codebook ``bc`` (an n_cells ×
+    dim numpy matrix): pandas UDF returning the ``n_cells_out`` nearest
+    centroid ids (squared L2, ties broken by lower cell id).
+
+    An int64 codebook keeps every step exact (argsort over exact distances
+    ⇒ bit-reproducible across engines).  The float path uses the
+    ||v||² − 2v·c + ||c||² expansion, which is not bit-identical to a
+    direct (v−c)² accumulation — catastrophic cancellation on near-tie
+    distances can flip the argmin cell, acceptable for the approximate
+    un-oracled float variants only.
     """
-    spark = emb.sparkSession
-    planes = int_hyperplanes(n_tables, n_bits, dim, seed, quant)
-    # (n_tables*n_bits) × dim matrix; row t*n_bits+b = plane (t, b)
-    P = np.asarray([p for tbl in planes for p in tbl], dtype=np.int64)
-    codes = _sign_codes_udf(spark, P, n_tables, n_bits)
+    def nearest(V, C):
+        d = ((V * V).sum(axis=1)[:, None] - 2 * (V @ C.T)
+             + (C * C).sum(axis=1)[None, :])
+        idx = np.argsort(d, axis=1, kind="stable")[:, :n_cells_out]
+        return idx.astype(np.int32)
 
-    tagged = emb.select(
-        F.col(id_col).alias("vid"),
-        quantized(F.col(vec_col), quant).alias("qv"),
-    ).withColumn("codes", codes(F.col("qv")))
-    base = tagged.select(
-        "vid", "qv", F.posexplode("codes").alias("t", "code"))
-    q = (
-        tagged.where(F.col("vid").isin(query_ids))
-        .select(F.col("vid").alias("query_id"), F.col("qv").alias("qq"),
-                F.posexplode("codes").alias("t", "code"))
-    )
-    cands = (
-        F.broadcast(q).join(base, ["t", "code"])
-        .where(F.col("vid") != F.col("query_id"))
-        # multi-table probing CAN duplicate a pair — dedup before re-rank
-        .dropDuplicates(["query_id", "vid"])
-        .withColumn("dot", int_dot("qq", "qv", dim=dim))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("vid"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vid").alias("neighbor_id"), "dot")
-    )
+    return _matmul_udf(bc, "array<int>", nearest)
+
+
+def _ivf(emb, query_ids, id_col, vec, k, metric, cents, dtype, n_probe):
+    """IVF top-k: queries probe their ``n_probe`` nearest cells, the corpus
+    keeps its home cell cells[0].  A neighbor lives in exactly one cell,
+    so a (query, neighbor) pair matches at most once — no dedup shuffle."""
+    bc = emb.sparkSession.sparkContext.broadcast(np.asarray(cents, dtype))
+    return _topk(emb, query_ids, id_col, vec, k, metric,
+                 nearest_cells(bc, n_probe),
+                 lambda c: [F.explode(c).alias("cell")],
+                 lambda c: [c[0].alias("cell")])
 
 
 def kmeans_centroids(
@@ -397,41 +342,36 @@ def kmeans_centroids(
     n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
 ) -> list[list[float]]:
     """Deterministic Lloyd's iterations, DataFrame-native.
 
     Seeds = the k vectors with the smallest ids (deterministic, no RNG).
-    Each iteration: assign via the broadcast-numpy argmin UDF (narrow — no
-    shuffle of the corpus), then average per cluster via
-    posexplode + groupBy(cell, pos) — the partial (map-side) aggregation
-    collapses each partition to k·dim cells before the exchange, so the
-    shuffle is O(k·dim·partitions) regardless of corpus size (the former
-    per-dimension ``F.sum(x_i)`` fan-out meant dim agg columns — 768-dim
-    would have been 768-wide agg state per row).  Returns plain Python
+    Each iteration: assign via :func:`nearest_cells` (narrow — no shuffle
+    of the corpus), then average per cluster via posexplode +
+    groupBy(cell, pos) — the partial (map-side) aggregation collapses each
+    partition to k·dim cells before the exchange, so the shuffle is
+    O(k·dim·partitions) regardless of corpus size.  Returns plain Python
     lists (the coarse quantizer is tiny).
 
     The per-iteration ``collect()`` pulls O(k·dim) partial sums to the
-    driver — the codebook must land on the driver anyway to be broadcast,
-    but at k=2^16 × 768 that is ~50M cells per iteration: this trainer is
-    an offline / moderate-k tool.  Production IVF serves queries from a
-    PRECOMPUTED codebook (``ivf_topk(codebook=...)`` /
-    ``ivf_topk_int``'s fixed codebook), never by retraining in the query
-    path.  Each iteration's broadcast is destroyed after its job
-    completes so n_iter × codebook bytes never accumulate.
+    driver — at k=2^16 × 768 that is ~50M cells per iteration: this
+    trainer is an offline / moderate-k tool.  Production IVF serves
+    queries from a PRECOMPUTED codebook (``ivf_topk(codebook=...)`` /
+    ``ivf_topk_int``'s fixed codebook).  Each iteration's broadcast is
+    destroyed after its job completes so n_iter × codebook bytes never
+    accumulate on the driver and executors.
     """
-    spark = emb.sparkSession
+    sc = emb.sparkSession.sparkContext
     seeds = (
         emb.orderBy(F.col(id_col).asc()).limit(k)
         .select(vec_col).collect()
     )
     centroids = [[float(x) for x in r[0]] for r in seeds]
     for _ in range(n_iter):
-        bc = broadcast_codebook(spark, centroids)
-        assign = nearest_cells_from_broadcast(bc)
+        bc = sc.broadcast(np.asarray(centroids, dtype=np.float64))
         assigned = emb.select(
             F.col(vec_col).alias("v"),
-            assign(F.col(vec_col))[0].alias("c"),
+            nearest_cells(bc)(F.col(vec_col))[0].alias("c"),
         )
         stats = (
             assigned.select("c", F.posexplode("v").alias("pos", "x"))
@@ -458,51 +398,21 @@ def ivf_topk(
     n_cells: int = 8,
     n_probe: int = 2,
     dim: int = 64,
-    codebook: list[list[float]] | None = None,
+    codebook: list[list[float]] | str | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k: coarse k-means cells, probe the n_probe
-    nearest cells per query, exact cosine re-rank inside probed cells.
-
-    At 10^9 vectors the cell assignment is a narrow Arrow-batched matmul
-    (no shuffle) against a once-per-executor broadcast codebook, and the
-    search touches n_probe/n_cells of the corpus.  Pass ``codebook`` (a
-    PRECOMPUTED n_cells × dim list, e.g. from an offline
-    :func:`kmeans_centroids` run) to skip training in the query path —
-    the production mode; without it a k-means fit runs inline first.
+    """IVF approximate top-k: coarse k-means cells, exact cosine re-rank
+    inside the probed cells; the search touches n_probe/n_cells of the
+    corpus.  Pass ``codebook`` (a PRECOMPUTED n_cells × dim list, e.g.
+    from an offline :func:`kmeans_centroids` run, or its sink path) to
+    skip training in the query path — the production mode; without it a
+    k-means fit runs inline first.
     """
-    spark = emb.sparkSession
     if isinstance(codebook, str):  # path → S8 weights sink (serving mode)
-        codebook = read_codebook(spark, codebook)
+        codebook = read_codebook(emb.sparkSession, codebook)
     cents = codebook if codebook is not None else kmeans_centroids(
-        emb, k=n_cells, id_col=id_col, vec_col=vec_col, dim=dim)
-    # ONE UDF pass computes the n_probe nearest cells; the corpus keeps
-    # cell[0] (its home cell), queries explode all probes.  A neighbor
-    # lives in exactly one cell, so a (query, neighbor) pair can match at
-    # most once — no dedup shuffle needed.
-    nearest = nearest_cells_udf(spark, cents, n_cells_out=n_probe)
-    tagged = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v"),
-        nearest(F.col(vec_col)).alias("cells"),
-    )
-    base = tagged.select("vid", "v", F.col("cells")[0].alias("cell"))
-    q = (
-        tagged.where(F.col("vid").isin(query_ids))
-        .select(F.col("vid").alias("query_id"), F.col("v").alias("qv"),
-                F.explode("cells").alias("cell"))
-    )
-    cands = (
-        F.broadcast(q).join(base, "cell")
-        .where(F.col("vid") != F.col("query_id"))
-        .withColumn("cosine", float_cosine("qv", "v", dim=dim))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("vid"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vid").alias("neighbor_id"),
-                F.round("cosine", 4).alias("cosine"))
-    )
+        emb, k=n_cells, id_col=id_col, vec_col=vec_col)
+    return _ivf(emb, query_ids, id_col, F.col(vec_col), k, _cosine(dim),
+                cents, np.float64, n_probe)
 
 
 def write_codebook(spark, centroids, path: str) -> None:
@@ -537,10 +447,10 @@ def read_codebook(spark, path: str, integer: bool = False):
 def fixed_codebook(n_cells: int = 8, dim: int = 64, seed: int = 7,
                    quant: int = 1000) -> list[list[int]]:
     """Deterministic integer coarse-quantizer codebook (offline-trained
-    codebooks are broadcast like this in production IVF; here the cells are
-    seeded hyperplanes scaled to the same integer grid as ``quantized``)."""
-    return [[int(round(x * quant)) for x in _hyperplane(seed, dim, c, 0)]
-            for c in range(n_cells)]
+    codebooks are broadcast like this in production IVF; here cell c is
+    the seeded hyperplane (c, 0) on the same integer grid as
+    ``quantized``)."""
+    return hyperplanes(n_cells, 1, dim, seed, quant).tolist()
 
 
 def ivf_topk_int(
@@ -557,41 +467,11 @@ def ivf_topk_int(
 ) -> DataFrame:
     """IVF top-k over a FIXED integer codebook with quantized-int re-rank —
     every arithmetic step is exact 64-bit integer math, so a DuckDB oracle
-    can reproduce it bit-for-bit (unlike the float-cosine k-means variant).
-
-    Same scale shape as :func:`ivf_topk`: cell assignment is a narrow
-    Arrow-batched int64 matmul against the once-per-executor broadcast
-    codebook (NOT plan literals — a k=2^16 codebook would otherwise compile
-    to a megabyte-scale CASE chain), the probe touches n_probe/n_cells of
-    the corpus, re-rank is in-cell only.
-    """
-    spark = emb.sparkSession
+    can reproduce it bit-for-bit (unlike the float-cosine k-means variant
+    :func:`ivf_topk`)."""
     if isinstance(codebook, str):  # path → S8 weights sink (serving mode)
-        codebook = read_codebook(spark, codebook, integer=True)
+        codebook = read_codebook(emb.sparkSession, codebook, integer=True)
     cents = codebook if codebook is not None else fixed_codebook(
         n_cells=n_cells, dim=dim, quant=quant)
-    # ONE UDF pass (n_probe nearest cells per row): the corpus keeps its
-    # home cell cells[0], queries explode all probes.  A neighbor is in
-    # exactly one cell ⇒ pairs are already unique — no dedup shuffle.
-    nearest = nearest_cells_udf(spark, cents, n_cells_out=n_probe,
-                                integer=True)
-    tagged = emb.select(
-        F.col(id_col).alias("vid"), quantized(F.col(vec_col), quant).alias("qv")
-    ).withColumn("cells", nearest(F.col("qv")))
-    base = tagged.select("vid", "qv", F.col("cells")[0].alias("cell"))
-    q = (
-        tagged.where(F.col("vid").isin(query_ids))
-        .select(F.col("vid").alias("query_id"), F.col("qv").alias("qq"),
-                F.explode("cells").alias("cell"))
-    )
-    cands = (
-        F.broadcast(q).join(base, "cell")
-        .where(F.col("vid") != F.col("query_id"))
-        .withColumn("dot", int_dot("qq", "qv", dim=dim))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("vid"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vid").alias("neighbor_id"), "dot")
-    )
+    return _ivf(emb, query_ids, id_col, quantized(F.col(vec_col), quant), k,
+                _dot(dim), cents, np.int64, n_probe)

@@ -144,9 +144,10 @@ def _char_shingles(col, k: int = 3):
 SIM_MAX_BUCKET_DEFAULT = 1_000
 
 # Band shape default: r=4 rows × 32 bands, NOT the historical r=1 × 6.
-# Measured (tools/zipf_recall_study.py, round 7): on the zipf-entity corpus
-# (shared real-word vocab, power-law mention frequencies — the realistic
-# web-entity shape) r=1 collides every pair sharing ONE hot shingle, the
+# Measured (BASELINE.md round 7, zipf-entity recall study): on the
+# zipf-entity corpus (shared real-word vocab, power-law mention
+# frequencies — the realistic web-entity shape) r=1 collides every pair
+# sharing ONE hot shingle, the
 # cap then drops the flooded buckets wholesale, and same-entity recall
 # collapses to 0.47 at 300k norms; r=4/b=32 holds recall ≥0.99 on BOTH
 # corpus shapes with 2.3× fewer candidates and half the wall (a bucket
@@ -190,8 +191,8 @@ def similarity_edges(
     candidates on 50k pages) and the hot-bucket cap then DROPS true pairs
     wholesale.  r>1 suppresses low-similarity collisions before the cap
     ever fires; the kg_similarity_edges oracle pins r=1 explicitly to
-    stay hash-exact (tools/zipf_recall_study.py is the recall/cost
-    evidence per (cap, r) on both corpus shapes).
+    stay hash-exact (BASELINE.md round 7 holds the recall/cost evidence
+    per (cap, r) on both corpus shapes).
 
     ``max_bucket`` is the skew guard on LSH candidate pairing: a (band,
     sig) bucket of n members emits n² candidate rows, so one hot signature

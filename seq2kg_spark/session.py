@@ -15,7 +15,8 @@ The settings below are the ones that matter at 100 TB just as much as on
 
 The driver JVM starts from a per-machine class-data archive of the JDK and
 Spark classes (:func:`_driver_archive_options`), recorded once at the exit
-of the first session that finds none.
+of the first session that finds none, and again after a session finds the
+JVM could not use it.
 """
 
 from __future__ import annotations
@@ -184,6 +185,7 @@ def get_spark(
     # Spark prepends the default options to spark.driver.extraJavaOptions,
     # so a caller's extra options still apply; the archive only matters
     # when this call launches the JVM
+    opts = None
     if (SparkContext._gateway is None
             and "PYSPARK_GATEWAY_PORT" not in os.environ
             and "spark.driver.defaultJavaOptions" not in extra_conf):
@@ -193,6 +195,13 @@ def get_spark(
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # A JVM that could not map the archive (a damaged file, one the JVM
+    # rejects) runs without class sharing: delete the archive so the next
+    # session records a new one instead of starting cold every time.
+    if opts and opts.startswith("-XX:SharedArchiveFile=") and "sharing" \
+            not in spark._jvm.java.lang.System.getProperty("java.vm.info"):
+        with contextlib.suppress(OSError):
+            os.remove(opts.split()[0].split("=", 1)[1])
     # Ship the package to executor Python workers (the --py-files story;
     # required whenever the driver wasn't launched from the repo root).
     from seq2kg_spark.packaging import ship_package

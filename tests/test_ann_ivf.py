@@ -11,7 +11,7 @@ from seq2kg_spark.operators.ann import (
     fixed_codebook,
     ivf_topk_int,
     kmeans_centroids,
-    nearest_cells_udf,
+    nearest_cells,
     quantized,
 )
 
@@ -23,7 +23,8 @@ def _emb(spark):
 def test_assignment_matches_numpy_argmin(spark):
     emb = _emb(spark).limit(50)
     cents = fixed_codebook(n_cells=8, dim=64)
-    assign = nearest_cells_udf(spark, cents, integer=True)
+    assign = nearest_cells(
+        spark.sparkContext.broadcast(np.asarray(cents, dtype=np.int64)))
     got = (
         emb.select("vec_id", quantized(F.col("embedding")).alias("qv"))
         .withColumn("cell", assign(F.col("qv"))[0])
@@ -68,7 +69,7 @@ def test_kmeans_high_dim_no_column_fanout(spark):
             lambda i: ((F.col("id") + i) % 7).cast("float") / 7,
         ).alias("embedding"),
     )
-    cents = kmeans_centroids(emb, k=3, n_iter=1, dim=768)
+    cents = kmeans_centroids(emb, k=3, n_iter=1)
     assert len(cents) == 3 and all(len(c) == 768 for c in cents)
     assert all(np.isfinite(np.asarray(c)).all() for c in cents)
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from seq2kg_spark.operators.ann import (
     _hyperplane,
     float_cosine,
-    float_hyperplanes,
+    hyperplanes,
     ivf_topk,
     kmeans_centroids,
     lsh_bucketed_topk,
@@ -108,10 +108,15 @@ def test_production_dims(spark):
 
 
 def test_float_hyperplanes_shape():
-    P = float_hyperplanes(3, 4, 16, seed=1)
+    P = hyperplanes(3, 4, 16, seed=1)
     assert P.shape == (12, 16) and P.dtype == np.float64
     # row t*n_bits+b must equal plane (t, b)
     assert P[1 * 4 + 2].tolist() == pytest.approx(_hyperplane(1, 16, 1, 2))
+    # with quant: the same planes on the quantized integer grid
+    Q = hyperplanes(3, 4, 16, seed=1, quant=1000)
+    assert Q.dtype == np.int64
+    assert Q[6].tolist() == [int(round(x * 1000))
+                             for x in _hyperplane(1, 16, 1, 2)]
 
 
 def test_ivf_precomputed_codebook(spark):

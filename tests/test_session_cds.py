@@ -9,6 +9,7 @@ import os
 import subprocess
 import sys
 
+import pytest
 from pyspark.find_spark_home import _find_spark_home
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -76,12 +77,26 @@ def test_archive_recorded_at_exit_then_unusable_archive_falls_back(tmp_path):
     assert (cds / archives[0]).stat().st_size > 0
     assert "[cds" not in out
 
-    # a damaged archive: the JVM starts without it, the query is right
+    # a damaged archive: the JVM starts without it, the query is right,
+    # and the archive is deleted so the next session records a new one
     (cds / archives[0]).write_bytes(b"not a class-data archive" * 100)
     out = _child(SESSION, tmp_path)
     assert "RESULT 499500" in out
     assert f"-XX:SharedArchiveFile={cds / archives[0]}" in out
     assert "[cds" not in out
+    assert not (cds / archives[0]).exists()
+
+
+def test_archive_in_use_is_kept(spark):
+    """The test session itself: when its JVM started from an archive, the
+    JVM shares classes and the archive is still in place."""
+    opts = spark.sparkContext.getConf().get(
+        "spark.driver.defaultJavaOptions", "")
+    if not opts.startswith("-XX:SharedArchiveFile="):
+        pytest.skip("this session did not start from an archive")
+    info = spark._jvm.java.lang.System.getProperty("java.vm.info")
+    assert "sharing" in info
+    assert os.path.exists(opts.split()[0].split("=", 1)[1])
 
 
 def test_configured_spark_conf_dir_skips_archive(tmp_path):

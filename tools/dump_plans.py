@@ -57,12 +57,15 @@ def main() -> None:
         "before the self-join, array_intersect verify":
             E.q_dedup_minhash_lsh(spark, sf_dir),
         "ann_ivf_int: cell assignment is an ArrowEvalPython matmul over a "
-        "once-per-executor broadcast numpy codebook (no plan literals), "
-        "probe join broadcasts the 5-query side":
+        "once-per-executor broadcast numpy codebook (no plan literals) that "
+        "runs once per row — one ArrowEvalPython per input side, no "
+        "inferred key filter pushed below it; probe join broadcasts the "
+        "5-query side":
             E.q_ann_ivf_int(spark, sf_dir),
         "lsh_bucketed_topk (float): bucket codes from the same broadcast "
-        "matmul (ArrowEvalPython) as the integer variant — de-literalized "
-        "in round 4; bucket equi-join, never a cross product":
+        "matmul (ArrowEvalPython) as the integer variant, run once per row "
+        "— one ArrowEvalPython per input side; bucket equi-join, never a "
+        "cross product":
             E.q_lsh_bucketed_topk(spark, sf_dir),
         "sessions_batch: lag-gap-cumsum over one user-keyed window "
         "partitioning reused by both window functions and the session "
